@@ -530,6 +530,13 @@ def pair_features(
             if dedup_texts:
                 g.unpersist()  # both consumers materialized eagerly above
                 row_of = pd.Index(pdf["_rid"]).get_indexer(map_pdf["_tid"])
+                # get_indexer marks a missing id -1, which would silently
+                # read the LAST vector row
+                if (row_of < 0).any():
+                    raise ValueError(
+                        f"{int((row_of < 0).sum())} text representative ids "
+                        "have no vectorized row"
+                    )
                 ids = map_pdf["_rid"].tolist()
                 rows = row_of.astype(np.int64)
             else:

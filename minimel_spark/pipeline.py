@@ -249,6 +249,11 @@ def run_pipeline(
     )
 
     def _scored():
+        if ckpt.committed_rows("pair_features", feats) == 0:
+            # no candidate pair (e.g. clean() left no ambiguous anchor):
+            # nothing to train on, so commit an empty scored table with the
+            # normal schema — the LR refuses an empty training set
+            return feats.withColumn("score", F.lit(None).cast("double"))
         labeled = weak_pair_labels(feats, candidates)
         train = labeled.where(F.col("is_match").isNotNull())
         if cfg.train_sample_mod:

@@ -10,11 +10,17 @@ same API targets Iceberg tables — ``writeTo(...).createOrReplace()`` — with
 snapshot ids in place of _SUCCESS files; parquet keeps the sandbox dependency-
 free.)
 
+Committing a stage adds no Spark job to the parquet write itself. The table
+is read back with the schema just written (Spark's file source makes every field nullable on
+write and on read, so this is exactly the schema inference would find, without
+its job), and the lineage comes from the committed files themselves.
+
 Per-stage metrics land in ``<base>/_metrics/`` as one parquet row per
 (stage, partition_id): rows per partition (the lineage of which partition
-contributed what) plus stage wall time and total rows. ``spark_partition_id()``
-is evaluated inside the same job that writes the checkpoint, so the metrics
-describe the exact committed layout.
+contributed what) plus stage wall time. They are read on the driver from the
+committed part files' parquet footers (``part-NNNNN`` -> ``num_rows``) and
+written with pyarrow, so they describe the exact committed write layout and
+cost no job.
 """
 
 from __future__ import annotations
@@ -22,10 +28,43 @@ from __future__ import annotations
 import json
 import os
 import time
+import uuid
 from collections.abc import Callable
+from datetime import datetime, timezone
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
+
+_METRICS_SCHEMA = pa.schema(
+    [
+        ("partition_id", pa.int32()),
+        ("rows", pa.int64()),
+        ("stage", pa.string()),
+        ("wall_secs", pa.float64()),
+        ("committed_at", pa.timestamp("us", tz="UTC")),
+    ]
+)
+# the same schema as Spark reads it, so reading the metrics runs no
+# schema-inference job either
+_METRICS_DDL = (
+    "partition_id INT, rows BIGINT, stage STRING, wall_secs DOUBLE, "
+    "committed_at TIMESTAMP"
+)
+
+
+def _part_rows(path: str) -> dict[int, int]:
+    """Rows per write partition of a committed parquet directory, from the
+    part files' footers: ``part-NNNNN-...parquet`` -> NNNNN (a partition that
+    Spark split over several files sums them)."""
+    rows: dict[int, int] = {}
+    for name in os.listdir(path):
+        if name.startswith("part-") and name.endswith(".parquet"):
+            pid = int(name.split("-")[1])
+            n = pq.read_metadata(os.path.join(path, name)).num_rows
+            rows[pid] = rows.get(pid, 0) + n
+    return rows
 
 
 class Checkpointer:
@@ -56,27 +95,45 @@ class Checkpointer:
         df = build()
         df.write.mode("overwrite").parquet(path)
         wall = time.time() - t0
-        out = self.spark.read.parquet(path)
-        self._write_metrics(name, out, wall)
-        return out
+        self._write_metrics(name, path, wall)
+        return self.spark.read.schema(df.schema).parquet(path)
 
-    def _write_metrics(self, stage: str, df: DataFrame, wall_secs: float) -> None:
-        """X4: one row per (stage, partition) with row counts, plus the stage
-        total and wall time."""
-        per_part = (
-            df.groupBy(F.spark_partition_id().alias("partition_id"))
-            .agg(F.count(F.lit(1)).alias("rows"))
-            .withColumn("stage", F.lit(stage))
-            .withColumn("wall_secs", F.lit(float(wall_secs)))
-            .withColumn("committed_at", F.current_timestamp())
+    def committed_rows(self, stage: str, df: DataFrame) -> int:
+        """Row count of ``stage``: summed from its part-file footers once it
+        is committed (no job), else ``df.count()`` (checkpointing off)."""
+        if self.enabled and self.has(stage):
+            return sum(_part_rows(self._path(stage)).values())
+        return df.count()
+
+    def _write_metrics(self, stage: str, path: str, wall_secs: float) -> None:
+        """X4: one row per (stage, partition) with its committed row count,
+        plus the stage wall time, from the footers of the part files under
+        ``path``. Written to a hidden temporary name and renamed, so a reader
+        never sees a partial file."""
+        parts = sorted(_part_rows(path).items())
+        n = len(parts)
+        table = pa.table(
+            [
+                [p for p, _ in parts],
+                [r for _, r in parts],
+                [stage] * n,
+                [float(wall_secs)] * n,
+                [datetime.now(timezone.utc)] * n,
+            ],
+            schema=_METRICS_SCHEMA,
         )
-        per_part.write.mode("append").parquet(os.path.join(self.base, "_metrics"))
+        out_dir = os.path.join(self.base, "_metrics")
+        os.makedirs(out_dir, exist_ok=True)
+        name = f"part-{stage}-{uuid.uuid4().hex}.parquet"
+        tmp = os.path.join(out_dir, f".{name}.tmp")
+        pq.write_table(table, tmp)
+        os.replace(tmp, os.path.join(out_dir, name))
 
     def metrics(self) -> DataFrame | None:
         p = os.path.join(self.base, "_metrics")
         if not os.path.exists(p):
             return None
-        return self.spark.read.parquet(p)
+        return self.spark.read.schema(_METRICS_DDL).parquet(p)
 
     def write_manifest(self, params: dict) -> None:
         """X2 analogue: machine-readable run parameters instead of the

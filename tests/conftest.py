@@ -10,6 +10,22 @@ from minimel_spark.session import get_spark  # noqa: E402
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR_TEST", "/root/testdata/sf0.001")
 
 
+def _test_driver_mem():
+    """Driver heap for the test JVM: a quarter of physical memory, capped at
+    the session's 24g default. A heap larger than the machine lets the JVM
+    put off collection until the OOM killer takes it (the clean() strict
+    world grows it past 15 GB under a 24g cap), failing every later test."""
+    try:
+        total_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+    except (ValueError, OSError):
+        return "24g"
+    return f"{max(1024, min(24 * 1024, total_mb // 4))}m"
+
+
+# an explicit SPARK_GRAFT_DRIVER_MEM still wins
+os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", _test_driver_mem())
+
+
 @pytest.fixture(scope="session")
 def spark():
     s = get_spark("minimel_spark_tests", master="local[4]", shuffle_partitions=8)

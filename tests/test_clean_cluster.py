@@ -13,10 +13,12 @@ from minimel_spark.operators.clean import clean, rank_candidates
 from minimel_spark.operators.cluster import (
     cluster_candidates,
     connected_components,
+    min_label_components,
     similarity_edges,
 )
 from minimel_spark.operators.count import anchor_counts
 from minimel_spark.operators.extract import extract_paragraphs
+from minimel_spark.plans import count_plan_nodes
 from minimel_spark.sources.synth import synth_pages, synth_title_index
 
 
@@ -45,17 +47,102 @@ def _cc_oracle(edges):
     return {n: min(ms) for ms in comps.values() for n in ms}
 
 
-@pytest.mark.parametrize("seed", [0, 1, 2])
-def test_connected_components_random_graphs(spark, seed):
+def _cc_paths(df):
+    """(node -> component) from the default (single-task, in budget) path and
+    from the distributed loop pinned by a zero budget."""
+    fast = connected_components(df)
+    assert count_plan_nodes(fast, "MapInPandas") == 1
+    loop = connected_components(df, max_broadcast_nodes=0)
+    assert count_plan_nodes(loop, "MapInPandas") == 0
+    return (
+        {r["node"]: r["component"] for r in fast.collect()},
+        {r["node"]: r["component"] for r in loop.collect()},
+    )
+
+
+# non-ASCII ids, including one outside the BMP whose UTF-16 order differs
+# from Spark's UTF-8 byte order ("𝔘" sorts after "ｕ" in both Spark and Python)
+_WORDS = ["ü", "über", "straße", "東京", "ｕ", "𝔘", "é", "e", "ée", "z"]
+
+
+def _check_random_graph(spark, seed, ids):
+    """Single-task kernel, distributed loop and union-find agree on a random
+    graph with duplicate edges and self-loops (self-loops are dropped, so
+    the oracle sees the graph without them)."""
     rng = random.Random(seed)
-    nodes = [f"n{i:03d}" for i in range(60)]
+    if ids == "bigint":
+        # spread over the long range, negatives included
+        nodes = [rng.randrange(-(2**62), 2**62) for _ in range(60)]
+    elif ids == "unicode":
+        nodes = [f"{w}{i}" for i, w in enumerate(_WORDS)] + _WORDS
+    else:
+        nodes = [f"n{i:03d}" for i in range(60)]
     edges = [
         (rng.choice(nodes), rng.choice(nodes)) for _ in range(rng.randint(20, 80))
     ]
+    if ids == "unicode":
+        edges.append(("𝔘", "ｕ"))
+    edges += edges[:5] + [(n, n) for n in nodes[:3]]
+    t = "bigint" if ids == "bigint" else "string"
+    df = spark.createDataFrame(edges, f"src {t}, dst {t}")
+    fast, loop = _cc_paths(df)
+    want = _cc_oracle([(a, b) for a, b in edges if a != b])
+    assert fast == loop == want
+
+
+@pytest.mark.parametrize("seed", [0, 1, 2])
+def test_connected_components_random_graphs(spark, seed):
+    _check_random_graph(spark, seed, "string")
+
+
+@pytest.mark.parametrize("ids", ["bigint", "unicode"])
+def test_connected_components_random_graph_id_types(spark, ids):
+    _check_random_graph(spark, 0, ids)
+
+
+def test_connected_components_empty_edge_list(spark):
+    df = spark.createDataFrame([], "src bigint, dst bigint")
+    # zero edges are within any budget, so both calls take the single task
+    assert connected_components(df).count() == 0
+    assert connected_components(df, max_broadcast_nodes=0).count() == 0
+    assert connected_components(df, pre_contract=False).count() == 0
+    assert connected_components(df).schema.simpleString() == (
+        "struct<node:bigint,component:bigint>"
+    )
+    # only self-loops: nothing survives either
+    loops = spark.createDataFrame([(1, 1), (2, 2)], "src bigint, dst bigint")
+    assert connected_components(loops).count() == 0
+
+
+def test_connected_components_long_chain(spark):
+    """A 1,000-node path, listed out of order, is one component on both
+    paths (the worst case for naive label propagation)."""
+    rng = random.Random(5)
+    edges = [(i, i + 1) for i in range(999)]
+    rng.shuffle(edges)
+    df = spark.createDataFrame(edges, "src int, dst int")
+    fast, loop = _cc_paths(df)
+    assert fast == loop == {i: 0 for i in range(1000)}
+
+
+@pytest.mark.parametrize("seed", range(20))
+def test_min_label_components_kernel_vs_oracle(seed):
+    """The numpy kernel alone, on larger random graphs than the Spark tests
+    can afford, including many small components and adversarial labels."""
+    import numpy as np
+
+    rng = random.Random(seed)
+    n = rng.randint(2, 3000)
+    m = rng.randint(1, 4000)
+    edges = [(rng.randrange(n) * 7919 % 100_003, rng.randrange(n) * 7919 % 100_003)
+             for _ in range(m)]
     edges = [(a, b) for a, b in edges if a != b]
-    df = spark.createDataFrame(edges, "src string, dst string")
-    got = {r["node"]: r["component"] for r in connected_components(df).collect()}
-    assert got == _cc_oracle(edges)
+    src = np.array([a for a, _ in edges], dtype=np.int64)
+    dst = np.array([b for _, b in edges], dtype=np.int64)
+    nodes, comp = min_label_components(src, dst)
+    assert dict(zip(nodes.tolist(), comp.tolist())) == _cc_oracle(edges)
+    empty, empty_comp = min_label_components(src[:0], dst[:0])
+    assert len(empty) == len(empty_comp) == 0
 
 
 @pytest.mark.parametrize("seed", [3, 4])
@@ -74,10 +161,11 @@ def test_connected_components_pre_contract_equivalence(spark, seed):
     edges += [("z98", "z99")]
     edges = [(a, b) for a, b in edges if a != b]
     df = spark.createDataFrame(edges, "src string, dst string")
-    fast = {r["node"]: r["component"]
-            for r in connected_components(df, pre_contract=True).collect()}
-    slow = {r["node"]: r["component"]
-            for r in connected_components(df, pre_contract=False).collect()}
+    # a zero budget pins both runs to the distributed loop
+    fast = {r["node"]: r["component"] for r in connected_components(
+        df, pre_contract=True, max_broadcast_nodes=0).collect()}
+    slow = {r["node"]: r["component"] for r in connected_components(
+        df, pre_contract=False, max_broadcast_nodes=0).collect()}
     assert fast == slow == _cc_oracle(edges)
 
 

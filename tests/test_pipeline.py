@@ -29,14 +29,57 @@ def pipeline_result(spark, tmp_path_factory):
     return out, workdir, pages, index, cfg
 
 
+STAGES = [
+    "paragraphs", "anchor_counts", "candidates", "name_clusters",
+    "mentions", "records", "pairs", "pair_features", "scored_pairs",
+    "er_clusters",
+]
+
+
 def test_pipeline_all_stages_produce_rows(pipeline_result):
     out, *_ = pipeline_result
-    for stage in [
-        "paragraphs", "anchor_counts", "candidates", "name_clusters",
-        "mentions", "records", "pairs", "pair_features", "scored_pairs",
-        "er_clusters",
-    ]:
+    for stage in STAGES:
         assert out[stage].count() > 0, f"stage {stage} empty"
+
+
+def test_checkpoint_lineage_describes_committed_files(spark, pipeline_result):
+    """Per stage: the lineage rows sum to the committed row count, their
+    partition ids are the part-file ids, and the job-free read-back schema
+    is the one Spark infers from the files."""
+    import os
+
+    out, workdir, *_ = pipeline_result
+    lineage: dict = {}
+    for r in out["metrics"].collect():
+        lineage.setdefault(r["stage"], []).append((r["partition_id"], r["rows"]))
+    for stage in STAGES:
+        path = os.path.join(workdir, stage)
+        part_ids = {
+            int(f.split("-")[1]) for f in os.listdir(path) if f.startswith("part-")
+        }
+        ids = [p for p, _ in lineage[stage]]
+        assert sorted(ids) == sorted(part_ids), stage
+        assert sum(n for _, n in lineage[stage]) == out[stage].count(), stage
+        assert out[stage].schema == spark.read.parquet(path).schema, stage
+
+
+def test_checkpoint_resume_reads_every_stage_without_recompute(spark, pipeline_result):
+    from minimel_spark.sources.checkpoint import Checkpointer
+
+    out, workdir, *_ = pipeline_result
+
+    def recompute():
+        raise AssertionError("resume recomputed a committed stage")
+
+    ckpt = Checkpointer(spark, workdir)
+    n_lineage = ckpt.metrics().count()
+    for stage in STAGES:
+        got = ckpt.stage(stage, recompute)
+        assert got.schema == out[stage].schema, stage
+        assert got.count() == out[stage].count(), stage
+        assert ckpt.committed_rows(stage, got) == out[stage].count(), stage
+    # a resumed stage adds no lineage rows
+    assert ckpt.metrics().count() == n_lineage
 
 
 def test_pipeline_metrics_lineage(pipeline_result):
@@ -98,6 +141,40 @@ def test_pipeline_pivot_cluster_method(spark, pipeline_result, tmp_path):
     assert all(memb.get(cl) == cl for cl in set(memb.values()))
     with pytest.raises(ValueError, match="cluster_method"):
         run_pipeline(spark, pages, index, config=PipelineConfig(cluster_method="bogus"))
+
+
+def test_pipeline_no_ambiguous_anchor_commits_empty_tail(spark, pipeline_result, tmp_path):
+    """A world where every anchor links one entity: clean() keeps no
+    ambiguous anchor, so there are no mentions, records or pairs. Training is
+    skipped and scored_pairs / er_clusters commit empty, with the schemas of
+    a normal run."""
+    import datetime
+
+    out, *_ = pipeline_result
+    names = ["alpha", "bravo", "charlie", "delta"]
+    index = spark.createDataFrame(
+        [(n.capitalize(), 500 + i) for i, n in enumerate(names)],
+        "title string, qid long",
+    )
+    text = "\n\n".join(f"[[{n.capitalize()}|{n}]] plain words here" for n in names)
+    pages = spark.createDataFrame(
+        [
+            (f"https://example.org/p{p}", datetime.datetime(2024, 1, 1),
+             text.encode(), text, "en")
+            for p in range(12)
+        ],
+        "url string, warc_ts timestamp, html binary, text string, lang string",
+    )
+    got = run_pipeline(
+        spark, pages, index, workdir=str(tmp_path / "ck"),
+        config=PipelineConfig(min_count=2, bands=6, num_hashes=12),
+    )
+    assert got["anchor_counts"].count() > 0
+    assert got["candidates"].count() == 0
+    for stage in ("pair_features", "scored_pairs", "er_clusters"):
+        assert got[stage].count() == 0, stage
+    for stage in ("scored_pairs", "er_clusters"):
+        assert got[stage].schema == out[stage].schema, stage
 
 
 def test_er_clusters_group_same_entity_mentions(pipeline_result):
