@@ -19,7 +19,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from .operators.evaluate import align_gold_pred, macro_scores, micro_scores
-from .operators.scoring import most_common_sense, predict_cascade
+from .operators.scoring import predict_cascade
 from .pipeline import PipelineConfig, run_pipeline
 
 
@@ -98,13 +98,3 @@ def sweep(
             os.path.join(workdir, "evaluation")
         )
     return df
-
-
-def most_common_sense_baseline(counts: DataFrame, gold: DataFrame) -> DataFrame:
-    """X6 baseline row (run.py:305-312): most-common-sense accuracy on gold."""
-    pred = gold.select("doc_id", "name").distinct().withColumn(
-        "anchor", F.lower("name")
-    ).join(most_common_sense(counts), "anchor", "left").select(
-        "doc_id", "name", F.col("count_qid").alias("pred_qid")
-    )
-    return micro_scores(align_gold_pred(gold, pred))

@@ -80,15 +80,6 @@ def _tokenize(code: str):
         return str.split
 
 
-def has_icu() -> bool:
-    try:  # pragma: no cover - optional dependency
-        import icu_tokenizer  # type: ignore  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
 def _require(package: str, code: str):
     raise ImportError(
         f"stemming for language {code!r} requires {package}; "

@@ -10,13 +10,7 @@ import pandas as pd
 import pyspark.sql.functions as F
 import pyspark.sql.types as T
 
-from .normalize import char_shingles, normalize, vw_tok
-
-
-@F.pandas_udf(T.StringType())
-def normalize_udf(anchors: pd.Series) -> pd.Series:
-    """Anchor normalization (P2, minimel/normalize.py:6-20); None = dropped."""
-    return anchors.map(lambda a: normalize(a), na_action="ignore")
+from .normalize import char_shingles, normalize
 
 
 def normalize_lang_udf(language: str | None):
@@ -27,12 +21,6 @@ def normalize_lang_udf(language: str | None):
         return anchors.map(lambda a: normalize(a, language=language), na_action="ignore")
 
     return _udf
-
-
-@F.pandas_udf(T.ArrayType(T.StringType()))
-def vw_tok_udf(texts: pd.Series) -> pd.Series:
-    """VW-style word tokenizer (P4, minimel/vectorize.py:20-28)."""
-    return texts.map(vw_tok, na_action="ignore")
 
 
 @F.pandas_udf(T.ArrayType(T.StringType()))

@@ -47,12 +47,6 @@ PARAGRAPH_SCHEMA = T.StructType([
 ])
 
 
-def page_title(url_col):
-    """Page-name surrogate from the url (the reference's ``pagetitle``):
-    the last path segment, query string stripped."""
-    return F.regexp_extract(url_col, r"([^/?]+)(?:\?[^/]*)?$", 1)
-
-
 def extract_paragraphs(
     pages: DataFrame,
     title_index: DataFrame,

@@ -17,9 +17,10 @@ Feature computation is O(records + distinct-name-pairs), not O(pairs):
   JVM whole-stage codegen); only Jaro-Winkler is a (tiny) pandas UDF.
 - ``cos_bow`` (hashed bag-of-words cosine over each record's context, the
   reference hashvec cousin, minimel/vectorize.py:170-181) precomputes one
-  sparse map<int,double> + L2 norm PER RECORD in an Arrow-batched pandas UDF,
-  then evaluates the pair dot product JVM-side with ``aggregate`` over
-  ``map_keys`` — zero Python in the per-pair hot path.
+  sparse map<int,double> + L2 norm (or a dense array) PER DISTINCT TEXT in an
+  Arrow-batched pandas UDF. Under the broadcast budget the pair dot product
+  is a vectorized Arrow UDF over the two id columns against that broadcast
+  table; above it, a JVM fold over the two joined vectors.
 """
 
 from __future__ import annotations
@@ -38,13 +39,13 @@ from ..functions.udfs import shingles_udf
 
 BOW_DIM = 1 << 18
 
-# cos_bow broadcast budget (r6, guide §8 "decide with small rows"): when the
-# per-record vector/bow payload fits this budget, the pair dot product is
-# computed by a vectorized Arrow UDF over ONLY the two 8-byte id columns
-# against a broadcast numpy table — no join of the (much larger) pair table
-# at all. Past the budget (billions of records on a real cluster) the join
-# path runs unchanged. Parameterised via env for deployments; 128 MiB is the
-# same dimension-table magnitude as the session's autoBroadcastJoinThreshold.
+# cos_bow broadcast budget: when the distinct-text vector table's payload,
+# measured exactly on the persisted table, fits this budget, the pair dot
+# product is computed by a vectorized Arrow UDF over ONLY the two 8-byte id
+# columns against a broadcast numpy table — no join of the (much larger)
+# pair table at all. Past the budget the join path runs. Parameterised via
+# env for deployments; 128 MiB is the same dimension-table magnitude as the
+# session's autoBroadcastJoinThreshold.
 DEFAULT_VEC_BCAST_BYTES = int(
     os.environ.get("MINIMEL_VEC_BCAST_BYTES", str(128 << 20))
 )
@@ -58,6 +59,11 @@ DEFAULT_VEC_BCAST_BYTES = int(
 # vs 512 B dense payload, before map overhead tips it).
 AUTO_DENSE_DIM = 64
 AUTO_DENSE_MIN_TOKENS = 32.0
+
+_FEATURE_COLS = (
+    "rec_id_a", "rec_id_b", "n_blocks", "name_a", "name_b",
+    "lev_sim", "jacc3", "jw", "cos_bow",
+)
 
 
 @F.pandas_udf(T.DoubleType())
@@ -141,21 +147,6 @@ def name_pair_features(name_pairs: DataFrame) -> DataFrame:
     )
 
 
-def record_bow(
-    records: DataFrame, rec_id_col: str = "rec_id", text_col: str = "text"
-) -> DataFrame:
-    """(rec_id) -> (rec_id, bow map<int,double>, bow_norm): one UDF pass per
-    record; norms JVM-side."""
-    return records.select(
-        F.col(rec_id_col).alias("_rid"), bow_udf(F.col(text_col)).alias("bow")
-    ).withColumn(
-        "bow_norm",
-        F.sqrt(
-            F.aggregate(F.map_values("bow"), F.lit(0.0), lambda acc, x: acc + x * x)
-        ),
-    )
-
-
 def _pair_cosine(bow_a, bow_b, norm_a, norm_b):
     """JVM sparse-dot (the past-broadcast-budget fallback): left fold over
     side a's entries, look up side b. ``map_entries`` iteration (r6) reads
@@ -180,11 +171,9 @@ def _dense_cos_bcast_udf(spark, ids, rows, mat):
     never enters the pair stream), gathers both rows and accumulates the
     dot with a strict left fold over the dim axis — the same add order as
     the join path's ``aggregate(zip_with(...))``, so the two paths are
-    bit-identical. ``rows[i]`` maps ``ids[i]`` to its row of ``mat`` — an
-    identity when vectors were built per record, an indirection into the
-    (much smaller) distinct-text matrix when texts repeat across records
-    (r6: mention-style corpora share one paragraph text across dozens of
-    records, so the vector table needs one row per TEXT, not per record).
+    bit-identical. ``rows[i]`` maps ``ids[i]`` to its row of ``mat``, the
+    distinct-text matrix (mention-style corpora share one paragraph text
+    across dozens of records).
     The id -> row lookup is a ``pd.Index`` built ONCE per
     Python worker and probed with the vectorized ``get_indexer`` (guide
     §4.5 — heavyweight init amortized across batches; a per-batch
@@ -221,7 +210,7 @@ def _dense_cos_bcast_udf(spark, ids, rows, mat):
 
 def _sparse_cos_bcast_udf(spark, ids, rows, keys, vals, counts, norms):
     """cos_bow over a broadcast sparse bow table (flattened CSR-style
-    arrays, entries in each record's bow insertion order). Per batch: gather
+    arrays, entries in each text's bow insertion order). Per batch: gather
     side a's entry ranges, look up side b via one vectorized searchsorted on
     a (record, key)-combined sorted array, multiply, and reduce per pair.
     Missing b keys contribute exactly 0.0 (as in the JVM fold, where adding
@@ -230,8 +219,7 @@ def _sparse_cos_bcast_udf(spark, ids, rows, keys, vals, counts, norms):
     reduction is ``np.add.reduceat`` (sequential within a segment). Pairs
     with an id absent from the record table come back NaN and are dropped
     by the caller (inner-join semantics). ``rows[i]`` maps ``ids[i]`` to its
-    CSR row — identity for per-record bows, an indirection into the
-    distinct-text CSR when texts repeat across records (r6)."""
+    row of the distinct-text CSR."""
     import numpy as np
 
     n = len(counts)
@@ -368,23 +356,24 @@ def pair_features(
     pair_features repeatedly over the same records (sweeps, benchmarks)
     should resolve the knob once and pass the explicit dim (ADVICE r4).
 
-    ``max_broadcast_vec_bytes``: while the per-record cos payload fits this
-    budget (dense: the exactly-known rows * dim * 8 B; sparse: a conservative
-    token-count estimate from one JVM agg), ``cos_bow`` is computed by a
-    vectorized Arrow UDF over ONLY the two id columns against a broadcast
-    numpy table — the per-pair vector/bow joins (and the interpreted
-    higher-order-function dot, the r5 bottleneck: per-pair ``zip_with`` +
-    ``aggregate`` folds, and the sparse path's O(|a|·|b|) ``element_at``
-    map probes) disappear from the plan entirely (guide §4.2/§8: decide
-    with small rows, keep the heavy payload out of the pair stream). Past
-    the budget — billions of records on a real cluster — the join path runs
-    as before. The dense broadcast path is bit-identical to the join path
-    (same fold order); the sparse broadcast path agrees to float
-    associativity (same addend sequence, ``np.add.reduceat`` reduction).
-    ``None`` disables the broadcast path outright; the default is the
-    ``MINIMEL_VEC_BCAST_BYTES`` env knob (128 MiB). Records are assumed to
-    carry unique ``rec_id_col`` values (both paths: the join path would
-    multiply pair rows on duplicate ids, the broadcast path keeps one).
+    ``max_broadcast_vec_bytes``: ``cos_bow`` reads ONE persisted vector
+    table with a row per distinct text and the list of record ids carrying
+    it. One agg over that table measures the exact driver payload (16 B per
+    record id plus the dense ``n_text * dim * 8`` B or the sparse 16 B per
+    bow entry). While it fits this budget the table is pulled to the
+    driver, and ``cos_bow`` is computed by a vectorized Arrow UDF over ONLY
+    the two id columns against a broadcast numpy table — the per-pair
+    vector/bow joins (and the interpreted higher-order-function dot,
+    per-pair ``zip_with`` + ``aggregate`` folds, and the sparse path's
+    O(|a|·|b|) ``element_at`` map probes) disappear from the plan (guide
+    §4.2/§8: decide with small rows, keep the heavy payload out of the pair
+    stream). Past the budget the same table is exploded to one row per
+    record for two shuffle joins and the JVM fold. The dense broadcast
+    path is bit-identical to the join path (same fold order); the sparse
+    broadcast path agrees to float associativity (same addend sequence,
+    ``np.add.reduceat`` reduction). ``None`` disables the broadcast path
+    outright; the default is the ``MINIMEL_VEC_BCAST_BYTES`` env knob (128
+    MiB). Records are assumed to carry unique ``rec_id_col`` values.
     """
     dense_bow_dim = resolve_dense_bow_dim(records, dense_bow_dim, text_col)
     if persisted_out is not None:
@@ -429,232 +418,106 @@ def pair_features(
     ):
         name_feats = F.broadcast(name_feats)
     df = df.join(name_feats, ["name_a", "name_b"])
-    if text_col and max_broadcast_vec_bytes is not None:
-        # budget gate sizing (one shuffle-free agg): the dense payload is
-        # rows * dim * 8 B; the sparse bow payload is bounded by a
-        # conservative token-count estimate (the tokenizing sum only runs on
-        # the sparse path, where the bow UDF pass dwarfs it anyway). r6 also
-        # estimates the DISTINCT-text count (HLL ±2%): mention-style corpora
-        # attach one paragraph text to dozens of records, so the vector/bow
-        # table only needs one row per distinct text plus an 16 B/record
-        # id -> row map — 10-100x less Python tokenize work, driver pull and
-        # broadcast than the per-record build, and corpora whose per-record
-        # payload overflows the budget (the bench's sparse segment) come
-        # BACK under it. All three builds (per-record, distinct-text,
-        # join fallback) produce bit-identical cos_bow, so the choice is
-        # purely a cost decision.
-        aggs = [
-            F.count(F.lit(1)).alias("_n"),
-            F.approx_count_distinct(text_col, 0.02).alias("_nd"),
-        ]
-        if not dense_bow_dim:
-            aggs.append(
-                F.coalesce(
-                    F.sum(
-                        F.size(
-                            F.split(
-                                F.lower(F.coalesce(F.col(text_col), F.lit(""))),
-                                r"\W+",
-                            )
-                        )
-                    ),
-                    F.lit(0),
-                ).alias("_toks")
-            )
-        stats = records.agg(*aggs).first()
-        n_rec = stats["_n"]
-        # +1: approx_count_distinct ignores nulls; null text is its own group
-        n_text = min(n_rec, int(stats["_nd"] * 1.05) + 1)  # HLL slack
-        n_toks = 0 if dense_bow_dim else stats["_toks"]
-        # distinct-text payload: the map costs 16 B/record; tokens scale by
-        # the distinct ratio (texts are dup-heavy or they are not — a 1.1
-        # slack absorbs skewed duplication toward short texts)
-        ratio = n_text / max(1, n_rec)
-        if dense_bow_dim:
-            per_rec_bytes = n_rec * dense_bow_dim * 8
-            dedup_bytes = n_text * dense_bow_dim * 8 + n_rec * 16
-        else:
-            per_rec_bytes = n_rec * 32 + n_toks * 16
-            dedup_bytes = (
-                n_text * 32 + int(n_toks * ratio * 1.1) * 16 + n_rec * 16
-            )
-        # dedupe when texts repeat enough to pay for the groupBy (partial
-        # aggregation shrinks its shuffle to ~distinct texts/partition), or
-        # when only the deduped table fits the broadcast budget at all;
-        # MINIMEL_VEC_DEDUP_TEXTS=0 pins the r5-shaped per-record build
-        dedup_texts = (
-            os.environ.get("MINIMEL_VEC_DEDUP_TEXTS", "1") != "0"
-            and dedup_bytes <= max_broadcast_vec_bytes
-            and (n_text <= 0.7 * n_rec or per_rec_bytes > max_broadcast_vec_bytes)
+    if not text_col:
+        return df.withColumn("cos_bow", F.lit(0.0)).select(*_FEATURE_COLS)
+    # ONE vector table with a row per distinct text (mention-style corpora
+    # attach one paragraph text to dozens of records): the UDF runs once per
+    # text, and ``_rids`` lists the records that carry it. The UDFs read null
+    # as "", so grouping on the coalesced text is value-preserving.
+    vt = records.groupBy(
+        F.coalesce(F.col(text_col), F.lit("")).alias("_t")
+    ).agg(F.collect_list(rec_id_col).alias("_rids"))
+    if dense_bow_dim:
+        vt = vt.select("_rids", _dense_bow_udf(dense_bow_dim)("_t").alias("_v"))
+        payload = F.count(F.lit(1)) * (dense_bow_dim * 8)
+    else:
+        vt = vt.select("_rids", bow_udf("_t").alias("bow")).withColumn(
+            "bow_norm",
+            F.sqrt(F.aggregate(F.map_values("bow"), F.lit(0.0), lambda acc, x: acc + x * x)),
         )
-        use_bcast = dedup_texts or per_rec_bytes <= max_broadcast_vec_bytes
-        spark = records.sparkSession
-        if use_bcast:
+        # 8 B key + 8 B value per entry, 8 B norm + 8 B count per text
+        payload = F.sum(F.size("bow")) * 16 + F.count(F.lit(1)) * 16
+    vt = vt.persist()  # feeds the size agg AND the pull (or both join sides)
+    if max_broadcast_vec_bytes is not None:
+        # exact driver payload, measured on the persisted table: 8 B id + 8 B
+        # row index per record plus the vectors
+        size = vt.agg(
+            F.coalesce(F.sum(F.size("_rids")) * 16 + payload, F.lit(0))
+        ).first()[0]
+        if size <= max_broadcast_vec_bytes:
             import numpy as np
 
-            if dedup_texts:
-                # exact id -> distinct-text mapping: group on the coalesced
-                # text (the bow/vec UDFs treat null as "", so folding null
-                # into "" is value-preserving), one representative id per
-                # text, and a broadcast join back for the (record, text) map
-                rt = records.select(
-                    F.col(rec_id_col).alias("_rid"),
-                    F.coalesce(F.col(text_col), F.lit("")).alias("_t"),
-                )
-                g = rt.groupBy("_t").agg(F.min("_rid").alias("_tid")).persist()
-                map_pdf = (
-                    rt.join(F.broadcast(g), "_t").select("_rid", "_tid").toPandas()
-                )
-                vec_src = g.select(F.col("_tid").alias("_rid"), F.col("_t"))
-            else:
-                map_pdf = None
-                vec_src = records.select(
-                    F.col(rec_id_col).alias("_rid"), F.col(text_col).alias("_t")
-                )
             if dense_bow_dim:
-                pdf = vec_src.select(
-                    "_rid", _dense_bow_udf(dense_bow_dim)(F.col("_t")).alias("_v")
-                ).toPandas()
-                mat = (
-                    np.array(pdf["_v"].tolist(), dtype=np.float64)
-                    if len(pdf)
-                    else np.empty((0, dense_bow_dim))
-                )
+                pdf = vt.toPandas()
             else:
-                pdf = record_bow(vec_src, "_rid", "_t").select(
-                    "_rid",
+                pdf = vt.select(
+                    "_rids",
                     F.map_keys("bow").alias("_k"),
                     F.map_values("bow").alias("_w"),
                     "bow_norm",
                 ).toPandas()
-            if dedup_texts:
-                g.unpersist()  # both consumers materialized eagerly above
-                row_of = pd.Index(pdf["_rid"]).get_indexer(map_pdf["_tid"])
-                # get_indexer marks a missing id -1, which would silently
-                # read the LAST vector row
-                if (row_of < 0).any():
-                    raise ValueError(
-                        f"{int((row_of < 0).sum())} text representative ids "
-                        "have no vectorized row"
-                    )
-                ids = map_pdf["_rid"].tolist()
-                rows = row_of.astype(np.int64)
-            else:
-                ids = pdf["_rid"].tolist()
-                rows = np.arange(len(pdf), dtype=np.int64)
+            vt.unpersist()
+
+            def flat(col, dtype):  # one array from a column of per-text arrays
+                return np.concatenate([np.empty(0, dtype), *pdf[col]])
+
+            def lens(col):
+                return pdf[col].map(len).to_numpy(dtype=np.int64)
+
+            ids = flat("_rids", np.int64)
+            rows = np.repeat(np.arange(len(pdf), dtype=np.int64), lens("_rids"))
             if dense_bow_dim:
-                cos = _dense_cos_bcast_udf(
-                    spark, ids, rows, mat
-                ).asNondeterministic()  # guide §4.4: the isnan filter below
-                # must not duplicate the Arrow evaluation via filter pushdown
+                mat = flat("_v", np.float64).reshape(-1, dense_bow_dim)
+                cos = _dense_cos_bcast_udf(records.sparkSession, ids, rows, mat)
             else:
-                n = len(pdf)
-                counts = np.fromiter(
-                    (len(k) for k in pdf["_k"]), dtype=np.int64, count=n
-                )
-                keys = (
-                    np.concatenate(pdf["_k"].to_list()).astype(np.int64)
-                    if counts.sum()
-                    else np.empty(0, dtype=np.int64)
-                )
-                vals = (
-                    np.concatenate(pdf["_w"].to_list()).astype(np.float64)
-                    if counts.sum()
-                    else np.empty(0, dtype=np.float64)
-                )
                 cos = _sparse_cos_bcast_udf(
-                    spark,
+                    records.sparkSession,
                     ids,
                     rows,
-                    keys,
-                    vals,
-                    counts,
+                    flat("_k", np.int64),
+                    flat("_w", np.float64),
+                    lens("_k"),
                     pdf["bow_norm"].to_numpy(dtype=np.float64),
-                ).asNondeterministic()  # see the dense path note
+                )
             return (
-                df.withColumn("cos_bow", cos(F.col("rec_id_a"), F.col("rec_id_b")))
+                # nondeterministic (guide §4.4): the isnan filter must not
+                # duplicate the Arrow evaluation via filter pushdown
+                df.withColumn(
+                    "cos_bow",
+                    cos.asNondeterministic()(F.col("rec_id_a"), F.col("rec_id_b")),
+                )
                 .where(~F.isnan("cos_bow"))  # inner-join semantics: drop
                 # pairs referencing ids absent from the record table
-                .select(
-                    "rec_id_a", "rec_id_b", "n_blocks", "name_a", "name_b",
-                    "lev_sim", "jacc3", "jw", "cos_bow",
-                )
+                .select(*_FEATURE_COLS)
             )
-    if text_col and dense_bow_dim:
-        # persisted (receiver-owned): the vector table feeds BOTH join sides
-        # — without the cache the per-record embedding UDF runs twice over
-        # all records, so callers on the hot path should pass persisted_out
-        vecs = records.select(
-            F.col(rec_id_col).alias("_rid"),
-            _dense_bow_udf(dense_bow_dim)(F.col(text_col)).alias("_v"),
+    # over budget (or broadcast disabled): explode the same table into the
+    # per-record side of two shuffle joins and take the exact JVM fold
+    if persisted_out is not None:
+        persisted_out.append(vt)
+    else:
+        vt.unpersist()
+    vec_cols = vt.columns[1:]
+    per_rec = vt.select(F.explode("_rids").alias("_rid"), *vec_cols)
+    for side in "ab":
+        df = df.join(
+            per_rec.select(
+                F.col("_rid").alias(f"rec_id_{side}"),
+                *(F.col(c).alias(f"{c}_{side}") for c in vec_cols),
+            ),
+            f"rec_id_{side}",
         )
-        if persisted_out is not None:
-            vecs = vecs.persist()
-            persisted_out.append(vecs)
-        # past-budget (or broadcast-disabled) fallback: both joins stay
-        # shuffle joins and the dot is the exact JVM fold — unchanged r5
-        # semantics for corpora whose vector table cannot be broadcast
-        va = vecs.select(F.col("_rid").alias("rec_id_a"), F.col("_v").alias("_va"))
-        vb = vecs.select(F.col("_rid").alias("rec_id_b"), F.col("_v").alias("_vb"))
-        df = (
-            df.join(va, "rec_id_a")
-            .join(vb, "rec_id_b")
-            .withColumn(
-                "cos_bow",
-                F.aggregate(
-                    F.zip_with("_va", "_vb", lambda a, b: a * b),
-                    F.lit(0.0),
-                    lambda acc, x: acc + x,
-                ),
-            )
-            .drop("_va", "_vb")
-        )
-    elif text_col:
-        # persisted (receiver-owned) for the same two-consumer reason as the
-        # dense path; the sparse maps' byte size is data-dependent (no cheap
-        # exact bound), so these joins are never force-broadcast
-        bows = record_bow(records, rec_id_col, text_col)
-        if persisted_out is not None:
-            bows = bows.persist()
-            persisted_out.append(bows)
-        df = (
-            df.join(
-                bows.select(
-                    F.col("_rid").alias("rec_id_a"),
-                    F.col("bow").alias("_bow_a"),
-                    F.col("bow_norm").alias("_norm_a"),
-                ),
-                "rec_id_a",
-            )
-            .join(
-                bows.select(
-                    F.col("_rid").alias("rec_id_b"),
-                    F.col("bow").alias("_bow_b"),
-                    F.col("bow_norm").alias("_norm_b"),
-                ),
-                "rec_id_b",
-            )
-            .withColumn(
-                "cos_bow",
-                _pair_cosine(
-                    F.col("_bow_a"), F.col("_bow_b"), F.col("_norm_a"), F.col("_norm_b")
-                ),
-            )
-            .drop("_bow_a", "_bow_b", "_norm_a", "_norm_b")
+    if dense_bow_dim:
+        cos = F.aggregate(
+            F.zip_with("_v_a", "_v_b", lambda a, b: a * b),
+            F.lit(0.0),
+            lambda acc, x: acc + x,
         )
     else:
-        df = df.withColumn("cos_bow", F.lit(0.0))
-    return df.select(
-        "rec_id_a",
-        "rec_id_b",
-        "n_blocks",
-        "name_a",
-        "name_b",
-        "lev_sim",
-        "jacc3",
-        "jw",
-        "cos_bow",
-    )
+        cos = _pair_cosine(
+            F.col("bow_a"), F.col("bow_b"), F.col("bow_norm_a"), F.col("bow_norm_b")
+        )
+    return df.withColumn("cos_bow", cos).select(*_FEATURE_COLS)
+
 
 
 def edit_distance_join(

@@ -26,6 +26,34 @@ def _test_driver_mem():
 os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", _test_driver_mem())
 
 
+def _scan_local_rows_in_jvm():
+    """Test inputs come from ``spark.createDataFrame(list_of_rows)``, which
+    stores the rows as pickled batches (``BatchedSerializer(CPickleSerializer)``).
+    pyspark then re-pickles them through an identity Python map only because
+    that serializer object differs from ``AutoBatchedSerializer``, although
+    the JVM unpickler reads both framings alike. So every scan of a test
+    input ran Python tasks: about 0.4 s per scan on a 4-core host, repeated
+    per round by the iterative operators. Skip that identity pass; rows,
+    partitioning and plans stay the same."""
+    try:
+        from pyspark.core.rdd import RDD
+        from pyspark.serializers import BatchedSerializer, CPickleSerializer
+    except ImportError:
+        return
+    pickled = RDD._pickled
+
+    def _pickled(self):
+        d = self._jrdd_deserializer
+        if isinstance(d, BatchedSerializer) and type(d.serializer) is CPickleSerializer:
+            return self
+        return pickled(self)
+
+    RDD._pickled = _pickled
+
+
+_scan_local_rows_in_jvm()
+
+
 @pytest.fixture(scope="session")
 def spark():
     s = get_spark("minimel_spark_tests", master="local[4]", shuffle_partitions=8)

@@ -250,11 +250,12 @@ def test_cap_blocks_bounds_pairs(spark):
 def test_broadcast_budget_fallbacks_match_broadcast_path(spark, records):
     """VERDICT r2 #2: past the entry budget the forced broadcast hints in
     surface_blocked_pairs / pair_features must degrade to shuffle joins with
-    IDENTICAL results. Force a 1-entry budget so every gated join takes the
-    fallback, and compare against the always-hint path."""
+    IDENTICAL results. Force a 1-entry (1-byte for the cos_bow vectors)
+    budget so every gated join takes the fallback, and compare against the
+    always-hint path."""
     from minimel_spark.operators.blocking import surface_blocked_pairs
 
-    def run(bcast_names, bcast_pairs):
+    def run(bcast_names, bcast_pairs, **kw):
         p = surface_blocked_pairs(
             records, key_col="anchor", rec_id_col="rec_id",
             num_hashes=12, bands=6, max_pairs_per_block=10_000,
@@ -262,7 +263,7 @@ def test_broadcast_budget_fallbacks_match_broadcast_path(spark, records):
         )
         f = pair_features(
             p, records, name_col="anchor",
-            max_broadcast_name_pairs=bcast_pairs,
+            max_broadcast_name_pairs=bcast_pairs, **kw,
         )
         return {
             (r["rec_id_a"], r["rec_id_b"]): (
@@ -273,7 +274,8 @@ def test_broadcast_budget_fallbacks_match_broadcast_path(spark, records):
         }
 
     want = run(None, None)  # always-broadcast path
-    got = run(1, 1)  # every side table over budget -> shuffle joins
+    # every side table over budget -> shuffle joins
+    got = run(1, 1, max_broadcast_vec_bytes=1)
     assert want and got == want
 
 
@@ -793,34 +795,102 @@ def test_skyline_2d_dominance_and_ties(spark):
     assert set(skyline_2d(df, "s1", "s2").columns) == {"id", "s1", "s2"}
 
 
+def _ref_cos(ta, tb, dim):
+    """Driver-side hashed-BoW cosine straight from vw_tok + crc32: the
+    reference the shared vector table is checked against."""
+    import math
+    import zlib
+    from collections import Counter
+
+    from minimel_spark.functions.normalize import vw_tok
+    from minimel_spark.operators.pairs import BOW_DIM
+
+    def vec(t):
+        return Counter(
+            zlib.crc32(tok.encode("utf-8")) % (dim or BOW_DIM)
+            for tok in vw_tok(t or "")
+        )
+
+    a, b = vec(ta), vec(tb)
+    na = math.sqrt(sum(x * x for x in a.values()))
+    nb = math.sqrt(sum(x * x for x in b.values()))
+    if not na or not nb:
+        return 0.0
+    return sum(x * b[k] for k, x in a.items()) / (na * nb)
+
+
 def test_pair_features_distinct_text_build_matches_join_fallback(spark):
-    """r6: when records share texts (mention-style corpora), the broadcast
-    cos_bow table is built once per DISTINCT text with an id->row
-    indirection. Values must be bit-identical to the join fallback on both
-    the sparse and the dense path, missing-id pairs must still drop, and
-    null text must fold into the empty-text group losslessly."""
-    texts = ["alpha beta gamma", "beta gamma delta epsilon", None, ""]
-    rec_rows = [(i, f"name{i % 4}", texts[i % 4]) for i in range(40)]
-    records = spark.createDataFrame(
-        rec_rows, "rec_id long, name string, text string"
-    )
+    """The cos_bow table has one row per DISTINCT text with the list of
+    record ids carrying it. Values must be bit-identical between the
+    broadcast and the join path on both the sparse and the dense path, and
+    match a driver-side cosine, whether texts repeat across records or every
+    record has its own text; missing-id pairs must still drop, and null text
+    must fold into the empty-text group losslessly."""
+    shared = ["alpha beta gamma", "beta gamma delta epsilon", None, ""]
+    corpora = {
+        "shared": [shared[i % 4] for i in range(40)],
+        "distinct": [None, ""]
+        + [f"w{i} s{i % 3} t{i % 5} s{i % 3}" for i in range(2, 40)],
+    }
     pair_rows = [
         (a, b, 1) for a in range(40) for b in (a + 1, a + 7, a + 13) if b < 40
     ] + [(0, 999, 1)]  # 999 absent from records -> dropped on every path
     pairs = spark.createDataFrame(
         pair_rows, "rec_id_a long, rec_id_b long, n_blocks long"
     )
+    want_keys = {(a, b) for a, b, _ in pair_rows if b < 40}
 
-    def run(**kw):
-        return {
-            (r["rec_id_a"], r["rec_id_b"]): r["cos_bow"]
-            for r in pair_features(pairs, records, name_col="name", **kw).collect()
-        }
+    for kind, texts in corpora.items():
+        records = spark.createDataFrame(
+            [(i, f"name{i % 4}", t) for i, t in enumerate(texts)],
+            "rec_id long, name string, text string",
+        )
 
-    for dim in (None, 8):
-        # 4 distinct texts / 40 records -> the dedupe build fires under the
-        # default budget; the join fallback is the ground truth
-        bcast = run(dense_bow_dim=dim)
-        fallback = run(dense_bow_dim=dim, max_broadcast_vec_bytes=None)
-        assert bcast and bcast == fallback
-        assert (0, 999) not in bcast
+        def run(**kw):
+            return {
+                (r["rec_id_a"], r["rec_id_b"]): r["cos_bow"]
+                for r in pair_features(
+                    pairs, records, name_col="name", **kw
+                ).collect()
+            }
+
+        for dim in (None, 8):
+            bcast = run(dense_bow_dim=dim)
+            fallback = run(dense_bow_dim=dim, max_broadcast_vec_bytes=None)
+            assert bcast == fallback, (kind, dim)
+            assert set(bcast) == want_keys, (kind, dim)  # (0, 999) dropped
+            for (a, b), c in bcast.items():
+                assert c == pytest.approx(
+                    _ref_cos(texts[a], texts[b], dim), abs=1e-12
+                ), (kind, dim, a, b)
+
+
+def test_pair_features_skewed_texts_size_exactly(spark):
+    """One long distinct text plus many records sharing one short text: the
+    driver payload is the long text's bow, which a size estimate scaled by
+    the distinct-text ratio undercounts. With the budget below the true
+    payload (but above that estimate) cos_bow must take the join path and
+    still equal the broadcast-disabled result."""
+    long_text = " ".join(f"w{i}" for i in range(2000))
+    rows = [(0, "acme", long_text)] + [(i, "acme", "acme") for i in range(1, 201)]
+    records = spark.createDataFrame(rows, "rec_id long, name string, text string")
+    pairs = spark.createDataFrame(
+        [(0, b, 1) for b in range(1, 201)] + [(a, a + 1, 1) for a in range(1, 200)],
+        "rec_id_a long, rec_id_b long, n_blocks long",
+    )
+    # true payload >= 16 B * (2000 long-text entries + 201 ids) > 10_000 B;
+    # scaling all 2,200 tokens by the 2/201 distinct-text ratio gives < 4 KB
+    def joins(df):
+        return df._jdf.queryExecution().optimizedPlan().toString().count("Join ")
+
+    f = pair_features(pairs, records, name_col="name", max_broadcast_vec_bytes=10_000)
+    no_text = pair_features(pairs, records, name_col="name", text_col=None)
+    assert joins(f) == joins(no_text) + 2  # both vector joins are in the plan
+    got = {(r["rec_id_a"], r["rec_id_b"]): r["cos_bow"] for r in f.collect()}
+    want = {
+        (r["rec_id_a"], r["rec_id_b"]): r["cos_bow"]
+        for r in pair_features(
+            pairs, records, name_col="name", max_broadcast_vec_bytes=None
+        ).collect()
+    }
+    assert len(got) == 399 and got == want

@@ -286,7 +286,7 @@ def test_matcher_learns_separable_labels(spark):
     assert acc > 0.95
 
 
-def test_matcher_planted_recovery_fails_under_constant_scorer(spark):
+def test_matcher_planted_recovery_fails_under_constant_scorer(spark, tmp_path):
     """The er_matcher_planted gate genuinely depends on the TRAINED matcher:
     on the variant world the real pipeline recovers every entity exactly,
     while a constant-1 scorer merges entities through LSH-blocked cross pairs
@@ -297,8 +297,10 @@ def test_matcher_planted_recovery_fails_under_constant_scorer(spark):
     from minimel_spark.sources.synth import variant_world
 
     pages, index, vdim = variant_world(spark, n_entities=12, copies=2)
+    # checkpointed, so the three scorings below read committed stages
+    # instead of each recomputing the pipeline from pages
     out = run_pipeline(
-        spark, pages, index,
+        spark, pages, index, workdir=str(tmp_path / "ck"),
         config=PipelineConfig(min_count=1, bands=12, num_hashes=12),
     )
     records = out["records"].select("rec_id", "name").cache()
@@ -468,7 +470,7 @@ def test_spotlight_predict_against_fake_endpoint(spark):
     assert "bad" not in xml
 
 
-def test_pipeline_mega_block_cap_does_not_fragment_clusters(spark):
+def test_pipeline_mega_block_cap_does_not_fragment_clusters(spark, tmp_path):
     """VERDICT r3 #1 'done' criterion: a world with a same-name block FAR
     above the pair cap (the 'megaword' anchor appears in all 120 docs ->
     C(120,2) = 7140 >> cap 500) must still cluster at pairwise F1 >= 0.99
@@ -492,6 +494,7 @@ def test_pipeline_mega_block_cap_does_not_fragment_clusters(spark):
         spark,
         pages_from_documents(docs_df),
         doc_title_index(docs_df),
+        workdir=str(tmp_path / "ck"),
         config=PipelineConfig(min_count=1, max_pairs_per_block=500),
     )
     pred = out["er_clusters"]
