@@ -853,10 +853,7 @@ def q_er_pipeline_clusters(spark, sf_dir):
         spark,
         pages,
         index,
-        # dense_bow_dim pinned to the exact sparse path: the oracle-compared
-        # gate world must not depend on the "auto" crossover's dim-64
-        # approximation (the production default since r5)
-        config=PipelineConfig(min_count=1, max_pairs_per_block=2000, dense_bow_dim=None),
+        config=PipelineConfig(min_count=1, max_pairs_per_block=2000),
         persisted_out=gate_caches,
     )
     pred = out["er_clusters"].withColumnRenamed("cluster_id", "p")
@@ -926,8 +923,7 @@ def q_er_matcher_planted(spark, sf_dir):
         spark,
         pages,
         index,
-        # exact sparse cos_bow pinned (see q_er_pipeline_clusters)
-        config=PipelineConfig(min_count=1, bands=12, num_hashes=12, dense_bow_dim=None),
+        config=PipelineConfig(min_count=1, bands=12, num_hashes=12),
         persisted_out=gate_caches,
     )
     j = (

@@ -34,7 +34,7 @@ from minimel_spark.operators.count import anchor_counts
 from minimel_spark.operators.dedup import minhash_dups
 from minimel_spark.operators.extract import extract_paragraphs
 from minimel_spark.operators.mentions import detect_mentions
-from minimel_spark.operators.pairs import pair_features, resolve_dense_bow_dim
+from minimel_spark.operators.pairs import pair_features
 from minimel_spark.operators.scoring import match_edges, score_pairs, train_pair_matcher
 from minimel_spark.pipeline import weak_pair_labels
 from minimel_spark.session import get_spark
@@ -75,14 +75,9 @@ def build_records(spark, sf_dir):
     return records, counts, pars, n_pars, n_rec, t
 
 
-def score_segment(spark, records, counts, dense_bow=None):
+def score_segment(spark, records, counts):
     """The north-metric segment: records -> blocks -> pairs -> features ->
-    train -> scored pairs. Returns (n_pairs, seconds). ``dense_bow`` (None /
-    int, env SPARK_GRAFT_DENSE_BOW; "auto" is resolved ONCE by the caller
-    against the built records, not per segment run) opts the feature stage
-    into the dense hashed cosine. Since r5 the headline runs the production
-    default ("auto" -> dim 64 on this corpus, VERDICT r4 #4); one sparse rep
-    is recorded as ``pairs_scored_sparse`` for cross-round continuity."""
+    train -> scored pairs. Returns (scored, n_pairs, seconds)."""
     t0 = time.time()
     # Block keys are functions of the surface form, so blocking runs at NAME
     # level (dictionary-sized) with bounded expansion to record pairs — see
@@ -96,7 +91,6 @@ def score_segment(spark, records, counts, dense_bow=None):
     )
     feats = pair_features(
         pairs, records, name_col="name", persisted_out=stage_caches,
-        dense_bow_dim=dense_bow,
     ).persist()
     cands = counts.withColumn("weight", (F.col("cnt") + 1).cast("long")).select(
         "anchor", "qid", "weight"
@@ -137,14 +131,6 @@ def main():
     # noise-robust estimator. Headline `queries`/`value` carry the min;
     # `queries_median` is reported alongside for honesty about spread.
     reps = max(1, int(os.environ.get("SPARK_GRAFT_REPS", "3")))
-    # production default since r5: "auto" (the PipelineConfig default);
-    # "none"/"sparse" pins the exact sparse path, an int pins that dim
-    dense_raw = os.environ.get("SPARK_GRAFT_DENSE_BOW", "auto")
-    dense_bow = (
-        None
-        if dense_raw in ("", "none", "sparse", "0")
-        else ("auto" if dense_raw == "auto" else int(dense_raw))
-    )
 
     spark = get_spark("bench", master=f"local[{cpus}]")
     spark.sparkContext.setLogLevel("ERROR")
@@ -155,22 +141,12 @@ def main():
 
     total0 = time.time()
 
-    for i in range(reps):
+    for _ in range(reps):
         records, counts, pars, n_pars, n_rec, t_build = build_records(spark, sf_dir)
         for k, v in t_build.items():
             rec(k, v)
-        # "auto" resolves once per rep against the persisted records (one
-        # cheap agg) so repeated score_segment calls don't re-estimate
-        dense_dim = resolve_dense_bow_dim(records, dense_bow)
-        scored, n_pairs, sec = score_segment(spark, records, counts, dense_dim)
+        scored, n_pairs, sec = score_segment(spark, records, counts)
         rec("pairs_scored", sec)
-        if i == 0 and dense_dim is not None:
-            # cross-round continuity: one exact-sparse rep alongside the
-            # dense headline (different cos_bow plan, so the CacheManager
-            # cannot short-circuit it from the headline run's plan)
-            sc2, _, sec2 = score_segment(spark, records, counts, None)
-            rec("pairs_scored_sparse", sec2)
-            sc2.unpersist()
 
         t0 = time.time()
         edges = match_edges(scored, 0.5)
@@ -259,7 +235,6 @@ def main():
         "reps": reps,
         "sf": sf,
         "cpus": cpus,
-        "dense_bow": dense_raw or None,
         "total_sec": round(total, 2),
         "n_paragraphs": n_pars,
         "n_records": n_rec,
@@ -304,10 +279,9 @@ def main():
                 base.unpersist()
             # best-of-N: exogenous machine load only ever SLOWS a run, so the
             # per-level minimum wall time is the noise-robust estimator
-            dense_dim = resolve_dense_bow_dim(recs, dense_bow)
             best, n_p = None, 0
             for _ in range(reps):
-                scored, n_p, sec = score_segment(s, recs, cnts, dense_dim)
+                scored, n_p, sec = score_segment(s, recs, cnts)
                 scored.unpersist()
                 best = sec if best is None else min(best, sec)
             scaling[f"local{ncpu}"] = {

@@ -9,7 +9,7 @@ shapes. Usage:
     python bench_extra.py [stage ...]        # default: all stages
     SPARK_GRAFT_SF_DIR=... SPARK_GRAFT_CPUS=... same as bench.py
 
-Stages: blocking, namefeats, feats_dense, feats_sparse, labels, train,
+Stages: blocking, namefeats, feats_sparse, labels, train,
 score_count, cc, minhash, minhash_cand, simhash, extract, corpus.
 Each prints "STAGE <name> <sec>" lines; plans go to plans/r06/_probe_<name>.txt.
 """
@@ -30,11 +30,7 @@ from minimel_spark.operators.count import anchor_counts
 from minimel_spark.operators.dedup import minhash_dups, simhash_dups
 from minimel_spark.operators.extract import extract_paragraphs
 from minimel_spark.operators.mentions import detect_mentions
-from minimel_spark.operators.pairs import (
-    name_pair_features,
-    pair_features,
-    resolve_dense_bow_dim,
-)
+from minimel_spark.operators.pairs import pair_features
 from minimel_spark.operators.scoring import match_edges, score_pairs, train_pair_matcher
 from minimel_spark.pipeline import weak_pair_labels
 from minimel_spark.session import get_spark
@@ -77,7 +73,7 @@ def main():
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
 
-    er_stages = {"blocking", "namefeats", "feats_dense", "feats_sparse",
+    er_stages = {"blocking", "namefeats", "feats_sparse",
                  "labels", "train", "score_count", "cc"}
     if not want or want & er_stages:
         sc.setJobDescription("build records")
@@ -121,19 +117,6 @@ def main():
             for c in caches:
                 c.unpersist()
 
-        if on("feats_dense"):
-            sc.setJobDescription("full feats dense")
-            caches = []
-            pairs = surface_blocked_pairs(
-                records, key_col="name", num_hashes=12, bands=6,
-                max_pairs_per_block=MAX_PAIRS_PER_BLOCK, persisted_out=caches)
-            fd = pair_features(pairs, records, name_col="name",
-                               dense_bow_dim=64, persisted_out=caches)
-            save_plan(fd, "feats_dense")
-            timed("feats_dense", lambda: noop(fd))
-            for c in caches:
-                c.unpersist()
-
         if on("feats_sparse"):
             sc.setJobDescription("full feats sparse")
             caches = []
@@ -141,7 +124,7 @@ def main():
                 records, key_col="name", num_hashes=12, bands=6,
                 max_pairs_per_block=MAX_PAIRS_PER_BLOCK, persisted_out=caches)
             fs = pair_features(pairs, records, name_col="name",
-                               dense_bow_dim=None, persisted_out=caches)
+                               persisted_out=caches)
             save_plan(fs, "feats_sparse")
             timed("feats_sparse", lambda: noop(fs))
             for c in caches:
@@ -153,9 +136,8 @@ def main():
             pairs = surface_blocked_pairs(
                 records, key_col="name", num_hashes=12, bands=6,
                 max_pairs_per_block=MAX_PAIRS_PER_BLOCK, persisted_out=caches)
-            dim = resolve_dense_bow_dim(records, "auto")
             feats = pair_features(pairs, records, name_col="name",
-                                  dense_bow_dim=dim, persisted_out=caches).persist()
+                                  persisted_out=caches).persist()
             timed("feats_materialize", lambda: feats.count())
             cands = counts.withColumn(
                 "weight", (F.col("cnt") + 1).cast("long")

@@ -22,7 +22,6 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 import bench as B  # frozen segment definitions — reuse, do not redefine
-from minimel_spark.operators.pairs import resolve_dense_bow_dim
 from minimel_spark.session import get_spark
 
 
@@ -52,10 +51,9 @@ def main():
         )
         spark.sparkContext.setLogLevel("ERROR")
         records, counts, pars, n_pars, n_rec, _ = B.build_records(spark, sf_dir)
-        dim = resolve_dense_bow_dim(records, "auto")
         best, n_pairs = None, 0
         for _ in range(reps):
-            scored, n_pairs, sec = B.score_segment(spark, records, counts, dim)
+            scored, n_pairs, sec = B.score_segment(spark, records, counts)
             scored.unpersist()
             best = sec if best is None else min(best, sec)
         out[f"{n_exec}x{cores}"] = {

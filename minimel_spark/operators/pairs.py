@@ -17,10 +17,10 @@ Feature computation is O(records + distinct-name-pairs), not O(pairs):
   JVM whole-stage codegen); only Jaro-Winkler is a (tiny) pandas UDF.
 - ``cos_bow`` (hashed bag-of-words cosine over each record's context, the
   reference hashvec cousin, minimel/vectorize.py:170-181) precomputes one
-  sparse map<int,double> + L2 norm (or a dense array) PER DISTINCT TEXT in an
-  Arrow-batched pandas UDF. Under the broadcast budget the pair dot product
-  is a vectorized Arrow UDF over the two id columns against that broadcast
-  table; above it, a JVM fold over the two joined vectors.
+  sparse map<int,double> + L2 norm PER DISTINCT TEXT in an Arrow-batched
+  pandas UDF. Under the broadcast budget the pair dot product is a
+  vectorized Arrow UDF over the two id columns against that broadcast table;
+  above it, a JVM fold over the two joined vectors.
 """
 
 from __future__ import annotations
@@ -50,16 +50,6 @@ DEFAULT_VEC_BCAST_BYTES = int(
     os.environ.get("MINIMEL_VEC_BCAST_BYTES", str(128 << 20))
 )
 
-# dense_bow_dim="auto" knobs: the dense hashed cosine pays off once the
-# sparse per-record map payload (~16-20 B per distinct token, shuffled onto
-# BOTH sides of every pair) outweighs the constant 8*dim-byte dense array.
-# Measured on sf0.1 (r3): dim 64 = 1.7x feature-stage speedup on ~100-token
-# contexts, dim 256 = a LOSS (2 KB arrays beat by sparse maps) — so auto
-# selects dim 64 with a crossover at ~32 avg tokens/record (~= 512 B sparse
-# vs 512 B dense payload, before map overhead tips it).
-AUTO_DENSE_DIM = 64
-AUTO_DENSE_MIN_TOKENS = 32.0
-
 _FEATURE_COLS = (
     "rec_id_a", "rec_id_b", "n_blocks", "name_a", "name_b",
     "lev_sim", "jacc3", "jw", "cos_bow",
@@ -82,29 +72,6 @@ def bow_udf(texts: pd.Series) -> pd.Series:
             v[h] = v.get(h, 0.0) + 1.0
         out.append(v)
     return pd.Series(out)
-
-
-def _dense_bow_udf(dim: int):
-    """Dense variant of ``bow_udf``: crc32 % dim counts as a fixed-size
-    L2-normalized array. Same tokenization, coarser hash space — the
-    100-TB-scale trade: per-record payload is a constant 8*dim bytes
-    (vs ~16 B per distinct token) and the pair dot product becomes an O(dim)
-    ``zip_with`` instead of O(|a|*|b|) map probing."""
-
-    @F.pandas_udf(T.ArrayType(T.DoubleType()))
-    def dense(texts: pd.Series) -> pd.Series:
-        import numpy as np
-
-        out = []
-        for t in texts:
-            v = np.zeros(dim)
-            for tok in vw_tok(t or ""):
-                v[zlib.crc32(tok.encode("utf-8")) % dim] += 1.0
-            n = float(np.sqrt((v * v).sum()))
-            out.append((v / n).tolist() if n else v.tolist())
-        return pd.Series(out)
-
-    return dense
 
 
 def candidate_pairs(blocked: DataFrame, rec_id_col: str = "rec_id") -> DataFrame:
@@ -163,49 +130,6 @@ def _pair_cosine(bow_a, bow_b, norm_a, norm_b):
     return F.when((norm_a == 0.0) | (norm_b == 0.0), F.lit(0.0)).otherwise(
         dot / (norm_a * norm_b)
     )
-
-
-def _dense_cos_bcast_udf(spark, ids, rows, mat):
-    """cos_bow over a broadcast dense L2-normalized matrix: the Arrow UDF
-    sees ONLY the two id columns (guide §4.1/§8 — the heavy per-pair payload
-    never enters the pair stream), gathers both rows and accumulates the
-    dot with a strict left fold over the dim axis — the same add order as
-    the join path's ``aggregate(zip_with(...))``, so the two paths are
-    bit-identical. ``rows[i]`` maps ``ids[i]`` to its row of ``mat``, the
-    distinct-text matrix (mention-style corpora share one paragraph text
-    across dozens of records).
-    The id -> row lookup is a ``pd.Index`` built ONCE per
-    Python worker and probed with the vectorized ``get_indexer`` (guide
-    §4.5 — heavyweight init amortized across batches; a per-batch
-    ``Series.map(dict)`` rebuilds the hashtable every call). Pairs whose id
-    is absent from the record table come back NaN and are dropped by the
-    caller (inner-join semantics)."""
-    import numpy as np
-
-    bc = spark.sparkContext.broadcast((ids, rows, mat))
-    state: dict = {}
-
-    @F.pandas_udf(T.DoubleType())
-    def cos(a: pd.Series, b: pd.Series) -> pd.Series:
-        if "ix" not in state:
-            ids_, rows_, m_ = bc.value
-            state["ix"] = pd.Index(ids_)
-            state["rows"] = rows_
-            state["m"] = m_
-        ix, rows_, m = state["ix"], state["rows"], state["m"]
-        ia = ix.get_indexer(a)  # -1 = missing
-        ib = ix.get_indexer(b)
-        ok = (ia >= 0) & (ib >= 0)
-        out = np.full(len(ia), np.nan)
-        if ok.any():
-            prod = m[rows_[ia[ok]]] * m[rows_[ib[ok]]]
-            acc = np.zeros(prod.shape[0])
-            for j in range(prod.shape[1]):  # strict left fold == JVM order
-                acc += prod[:, j]
-            out[ok] = acc
-        return pd.Series(out)
-
-    return cos
 
 
 def _sparse_cos_bcast_udf(spark, ids, rows, keys, vals, counts, norms):
@@ -278,45 +202,6 @@ def _sparse_cos_bcast_udf(spark, ids, rows, keys, vals, counts, norms):
     return cos
 
 
-def resolve_dense_bow_dim(
-    records: DataFrame,
-    dense_bow_dim: int | str | None,
-    text_col: str | None = "text",
-) -> int | None:
-    """Validate the ``dense_bow_dim`` knob and resolve ``"auto"`` to a
-    concrete dim (or None) from the measured avg-tokens crossover. The
-    "auto" path runs one eager aggregation over ``records`` — callers that
-    score repeatedly over the same records should call this once and pass
-    the resolved value to every ``pair_features`` invocation."""
-    if not (
-        dense_bow_dim is None
-        or dense_bow_dim == "auto"
-        or (isinstance(dense_bow_dim, int) and not isinstance(dense_bow_dim, bool)
-            and dense_bow_dim > 0)
-    ):
-        raise ValueError(
-            f"dense_bow_dim must be None, 'auto', or a positive int, got "
-            f"{dense_bow_dim!r}"
-        )
-    if dense_bow_dim != "auto":
-        return dense_bow_dim
-    if not text_col:
-        return None
-    avg_toks = (
-        records.agg(
-            F.avg(
-                F.size(
-                    F.split(
-                        F.lower(F.coalesce(F.col(text_col), F.lit(""))), r"\W+"
-                    )
-                )
-            )
-        ).first()[0]
-        or 0.0
-    )
-    return AUTO_DENSE_DIM if avg_toks >= AUTO_DENSE_MIN_TOKENS else None
-
-
 def pair_features(
     pairs: DataFrame,
     records: DataFrame,
@@ -324,7 +209,6 @@ def pair_features(
     name_col: str = "name",
     text_col: str | None = "text",
     max_broadcast_name_pairs: int | None = 5_000_000,
-    dense_bow_dim: int | str | None = None,
     persisted_out: list | None = None,
     max_broadcast_vec_bytes: int | None = DEFAULT_VEC_BCAST_BYTES,
 ) -> DataFrame:
@@ -342,40 +226,22 @@ def pair_features(
     join back degrades to a shuffle join instead of a forced multi-GB
     broadcast. ``None`` always hints.
 
-    ``dense_bow_dim`` switches ``cos_bow`` from the exact sparse form
-    (crc32 % 2^18 maps, O(|a|*|b|) per-pair map probing) to a dense hashed
-    approximation at that dimension: constant 8*dim-byte payloads through
-    the pair shuffle and an O(dim) ``zip_with`` dot — the knob to reach for
-    when the feature join's shuffle volume, not compute, bounds throughput
-    (long contexts, 10^9+ pairs). Default None keeps the exact semantics.
-    ``"auto"`` decides from the data: one cheap JVM agg estimates avg
-    tokens/record and picks dim ``AUTO_DENSE_DIM`` when it exceeds
-    ``AUTO_DENSE_MIN_TOKENS`` (the measured payload crossover — see the
-    constants above), else stays exact. NB "auto" runs that estimation scan
-    EAGERLY at plan-construction time on every call — callers invoking
-    pair_features repeatedly over the same records (sweeps, benchmarks)
-    should resolve the knob once and pass the explicit dim (ADVICE r4).
-
     ``max_broadcast_vec_bytes``: ``cos_bow`` reads ONE persisted vector
     table with a row per distinct text and the list of record ids carrying
     it. One agg over that table measures the exact driver payload (16 B per
-    record id plus the dense ``n_text * dim * 8`` B or the sparse 16 B per
-    bow entry). While it fits this budget the table is pulled to the
-    driver, and ``cos_bow`` is computed by a vectorized Arrow UDF over ONLY
-    the two id columns against a broadcast numpy table — the per-pair
-    vector/bow joins (and the interpreted higher-order-function dot,
-    per-pair ``zip_with`` + ``aggregate`` folds, and the sparse path's
-    O(|a|·|b|) ``element_at`` map probes) disappear from the plan (guide
-    §4.2/§8: decide with small rows, keep the heavy payload out of the pair
-    stream). Past the budget the same table is exploded to one row per
-    record for two shuffle joins and the JVM fold. The dense broadcast
-    path is bit-identical to the join path (same fold order); the sparse
-    broadcast path agrees to float associativity (same addend sequence,
-    ``np.add.reduceat`` reduction). ``None`` disables the broadcast path
+    record id, per bow entry and per text). While it fits this budget the
+    table is pulled to the driver, and ``cos_bow`` is computed by a
+    vectorized Arrow UDF over ONLY the two id columns against a broadcast
+    numpy table — the per-pair bow joins and the interpreted
+    higher-order-function fold with its O(|a|·|b|) ``element_at`` map probes
+    disappear from the plan (guide §4.2/§8: decide with small rows, keep the
+    heavy payload out of the pair stream). Past the budget the same table is
+    exploded to one row per record for two shuffle joins and the JVM fold.
+    The broadcast path agrees with the join path to float associativity
+    (same addend sequence, ``np.add.reduceat`` reduction). ``None`` disables the broadcast path
     outright; the default is the ``MINIMEL_VEC_BCAST_BYTES`` env knob (128
     MiB). Records are assumed to carry unique ``rec_id_col`` values.
     """
-    dense_bow_dim = resolve_dense_bow_dim(records, dense_bow_dim, text_col)
     if persisted_out is not None:
         # the pair stream feeds TWO subplans (the distinct name-pair branch
         # and the output rows); without a cache the whole pair-generation
@@ -424,38 +290,35 @@ def pair_features(
     # attach one paragraph text to dozens of records): the UDF runs once per
     # text, and ``_rids`` lists the records that carry it. The UDFs read null
     # as "", so grouping on the coalesced text is value-preserving.
-    vt = records.groupBy(
-        F.coalesce(F.col(text_col), F.lit("")).alias("_t")
-    ).agg(F.collect_list(rec_id_col).alias("_rids"))
-    if dense_bow_dim:
-        vt = vt.select("_rids", _dense_bow_udf(dense_bow_dim)("_t").alias("_v"))
-        payload = F.count(F.lit(1)) * (dense_bow_dim * 8)
-    else:
-        vt = vt.select("_rids", bow_udf("_t").alias("bow")).withColumn(
+    vt = (
+        records.groupBy(F.coalesce(F.col(text_col), F.lit("")).alias("_t"))
+        .agg(F.collect_list(rec_id_col).alias("_rids"))
+        .select("_rids", bow_udf("_t").alias("bow"))
+        .withColumn(
             "bow_norm",
             F.sqrt(F.aggregate(F.map_values("bow"), F.lit(0.0), lambda acc, x: acc + x * x)),
         )
-        # 8 B key + 8 B value per entry, 8 B norm + 8 B count per text
-        payload = F.sum(F.size("bow")) * 16 + F.count(F.lit(1)) * 16
-    vt = vt.persist()  # feeds the size agg AND the pull (or both join sides)
+        .persist()  # feeds the size agg AND the pull (or both join sides)
+    )
     if max_broadcast_vec_bytes is not None:
         # exact driver payload, measured on the persisted table: 8 B id + 8 B
-        # row index per record plus the vectors
+        # row index per record, 8 B key + 8 B value per bow entry, 8 B norm +
+        # 8 B count per text
         size = vt.agg(
-            F.coalesce(F.sum(F.size("_rids")) * 16 + payload, F.lit(0))
+            F.coalesce(
+                (F.sum(F.size("_rids")) + F.sum(F.size("bow")) + F.count(F.lit(1))) * 16,
+                F.lit(0),
+            )
         ).first()[0]
         if size <= max_broadcast_vec_bytes:
             import numpy as np
 
-            if dense_bow_dim:
-                pdf = vt.toPandas()
-            else:
-                pdf = vt.select(
-                    "_rids",
-                    F.map_keys("bow").alias("_k"),
-                    F.map_values("bow").alias("_w"),
-                    "bow_norm",
-                ).toPandas()
+            pdf = vt.select(
+                "_rids",
+                F.map_keys("bow").alias("_k"),
+                F.map_values("bow").alias("_w"),
+                "bow_norm",
+            ).toPandas()
             vt.unpersist()
 
             def flat(col, dtype):  # one array from a column of per-text arrays
@@ -466,19 +329,15 @@ def pair_features(
 
             ids = flat("_rids", np.int64)
             rows = np.repeat(np.arange(len(pdf), dtype=np.int64), lens("_rids"))
-            if dense_bow_dim:
-                mat = flat("_v", np.float64).reshape(-1, dense_bow_dim)
-                cos = _dense_cos_bcast_udf(records.sparkSession, ids, rows, mat)
-            else:
-                cos = _sparse_cos_bcast_udf(
-                    records.sparkSession,
-                    ids,
-                    rows,
-                    flat("_k", np.int64),
-                    flat("_w", np.float64),
-                    lens("_k"),
-                    pdf["bow_norm"].to_numpy(dtype=np.float64),
-                )
+            cos = _sparse_cos_bcast_udf(
+                records.sparkSession,
+                ids,
+                rows,
+                flat("_k", np.int64),
+                flat("_w", np.float64),
+                lens("_k"),
+                pdf["bow_norm"].to_numpy(dtype=np.float64),
+            )
             return (
                 # nondeterministic (guide §4.4): the isnan filter must not
                 # duplicate the Arrow evaluation via filter pushdown
@@ -496,26 +355,19 @@ def pair_features(
         persisted_out.append(vt)
     else:
         vt.unpersist()
-    vec_cols = vt.columns[1:]
-    per_rec = vt.select(F.explode("_rids").alias("_rid"), *vec_cols)
+    per_rec = vt.select(F.explode("_rids").alias("_rid"), "bow", "bow_norm")
     for side in "ab":
         df = df.join(
             per_rec.select(
                 F.col("_rid").alias(f"rec_id_{side}"),
-                *(F.col(c).alias(f"{c}_{side}") for c in vec_cols),
+                F.col("bow").alias(f"bow_{side}"),
+                F.col("bow_norm").alias(f"bow_norm_{side}"),
             ),
             f"rec_id_{side}",
         )
-    if dense_bow_dim:
-        cos = F.aggregate(
-            F.zip_with("_v_a", "_v_b", lambda a, b: a * b),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-    else:
-        cos = _pair_cosine(
-            F.col("bow_a"), F.col("bow_b"), F.col("bow_norm_a"), F.col("bow_norm_b")
-        )
+    cos = _pair_cosine(
+        F.col("bow_a"), F.col("bow_b"), F.col("bow_norm_a"), F.col("bow_norm_b")
+    )
     return df.withColumn("cos_bow", cos).select(*_FEATURE_COLS)
 
 

@@ -70,14 +70,6 @@ class PipelineConfig:
     max_broadcast_names: int | None = None
     max_broadcast_name_pairs: int | None = 5_000_000
     blocking_broadcast_names: int | None = 5_000_000
-    # None = exact sparse BoW cosine; an int (e.g. 64) switches pair scoring
-    # to the dense hashed approximation (constant payload, O(dim) dot) for
-    # shuffle-bound corpora; "auto" picks from the measured avg-tokens
-    # crossover — see pair_features(dense_bow_dim=...). Default "auto" since
-    # r5 (VERDICT r4 #4: 1.42-1.54x absolute on 2x input, efficiency
-    # 0.70 -> 0.76, decided from the data not the env); oracle gate worlds
-    # pin None to stay on the exact sparse semantics.
-    dense_bow_dim: int | str | None = "auto"
     # final entity-formation semantics over the match edges:
     # "transitive" (default, the reference's closure semantics — chains
     # A~B~C into one entity) or "pivot" (KwikCluster correlation
@@ -243,7 +235,6 @@ def run_pipeline(
             records,
             name_col="name",
             max_broadcast_name_pairs=cfg.max_broadcast_name_pairs,
-            dense_bow_dim=cfg.dense_bow_dim,
             persisted_out=persisted,
         ),
     )

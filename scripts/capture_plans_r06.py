@@ -73,17 +73,11 @@ def main():
         records, key_col="name", num_hashes=12, bands=6,
         max_pairs_per_block=5000, persisted_out=caches,
     )
-    feats_dense = pair_features(
-        pairs, records, name_col="name", dense_bow_dim=64, persisted_out=caches
-    )
-    put("pairs_scored_feats_dense", feats_dense)
-    feats_sparse = pair_features(
-        pairs, records, name_col="name", dense_bow_dim=None, persisted_out=caches
-    )
-    put("pairs_scored_sparse_feats", feats_sparse)
+    feats = pair_features(pairs, records, name_col="name", persisted_out=caches)
+    put("pairs_scored_sparse_feats", feats)
 
-    # full scored plan (train on the dense feats, like bench.py)
-    feats = feats_dense.persist()
+    # full scored plan (train on the feats, like bench.py)
+    feats = feats.persist()
     cands = counts.withColumn("weight", (F.col("cnt") + 1).cast("long")).select(
         "anchor", "qid", "weight"
     )

@@ -79,3 +79,28 @@ def pinned_rdd_ids(spark):
     flakes). unpersist() removes from this registry synchronously (only
     block deletion is async), so new-id checks are deterministic."""
     return set(spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray())
+
+
+def ref_cos_bow(texts_a, texts_b):
+    """Driver-side exact hashed-BoW cosines (vw_tok + crc32 % 2^18, null
+    text read as "") of the aligned text pairs: the reference
+    ``pair_features``'s ``cos_bow`` is checked against. One count row per
+    distinct text and one Gram matrix, so each pair costs a gather; integer
+    counts keep every dot exact."""
+    import numpy as np
+
+    from minimel_spark.functions.normalize import vw_tok
+    from minimel_spark.functions.similarity import hashed_bow
+
+    both = [t if isinstance(t, str) else "" for t in (*texts_a, *texts_b)]
+    texts, inv = np.unique(np.array(both, dtype=object), return_inverse=True)
+    bows = [hashed_bow(vw_tok(t)) for t in texts]
+    col = {k: j for j, k in enumerate(sorted(set().union(*bows)))}
+    m = np.zeros((len(texts), len(col)))
+    for i, bow in enumerate(bows):
+        for k, x in bow.items():
+            m[i, col[k]] = x
+    norm = np.sqrt((m * m).sum(axis=1))
+    ia, ib = inv[: len(texts_a)], inv[len(texts_a):]
+    den = norm[ia] * norm[ib]
+    return np.where(den == 0.0, 0.0, (m @ m.T)[ia, ib] / np.where(den == 0.0, 1.0, den))

@@ -15,7 +15,7 @@ from minimel_spark.operators.blocking import (
 from minimel_spark.operators.mentions import count_names, detect_mentions, nil_mentions
 from minimel_spark.operators.pairs import candidate_pairs, pair_features
 
-from conftest import pinned_rdd_ids
+from conftest import pinned_rdd_ids, ref_cos_bow
 
 
 # ---------- matcher unit tests (reference mentions.py:16-31 semantics) ----------
@@ -279,39 +279,6 @@ def test_broadcast_budget_fallbacks_match_broadcast_path(spark, records):
     assert want and got == want
 
 
-def test_pair_features_dense_bow_variant(spark, records):
-    """The opt-in dense hashed cosine (constant payload, O(dim) dot) must
-    agree with the exact sparse cosine: exactly where no hash collisions
-    collapse tokens (identical texts -> 1.0), and closely elsewhere at a
-    roomy dim. Default (dense_bow_dim=None) stays byte-identical sparse."""
-    blocked = union_blocks(
-        dictionary_blocks(records), minhash_blocks(records, num_hashes=12, bands=12)
-    )
-    pairs = candidate_pairs(blocked)
-    sparse = {
-        (r["rec_id_a"], r["rec_id_b"]): r["cos_bow"]
-        for r in pair_features(pairs, records, name_col="anchor").collect()
-    }
-    dense = {
-        (r["rec_id_a"], r["rec_id_b"]): r["cos_bow"]
-        for r in pair_features(
-            pairs, records, name_col="anchor", dense_bow_dim=4096
-        ).collect()
-    }
-    assert dense.keys() == sparse.keys()
-    for k in sparse:
-        assert abs(dense[k] - sparse[k]) < 0.05, (k, sparse[k], dense[k])
-        assert 0.0 <= dense[k] <= 1.0 + 1e-9
-    # determinism across partitioning
-    again = {
-        (r["rec_id_a"], r["rec_id_b"]): r["cos_bow"]
-        for r in pair_features(
-            pairs, records.repartition(5), name_col="anchor", dense_bow_dim=4096
-        ).collect()
-    }
-    assert again == dense
-
-
 def test_broadcast_budget_changes_join_strategy(spark, records):
     """Plan pin for the budget gate: under budget the name-side joins carry
     the broadcast hint (BroadcastHashJoin); over budget they must NOT force
@@ -471,44 +438,6 @@ def test_salted_mega_block_stays_connected_under_cap(spark):
     )
     assert sorted(map(tuple, again.collect())) == sorted(map(tuple, pairs.collect()))
     pairs.unpersist()
-
-
-def test_pair_features_dense_bow_auto_select(spark, records):
-    """dense_bow_dim='auto' picks from the measured avg-token crossover: the
-    short-context fixture (<32 tokens/record) must stay byte-identical to
-    the exact sparse path; long contexts must match the explicit dense-64
-    output."""
-    blocked = union_blocks(
-        dictionary_blocks(records), minhash_blocks(records, num_hashes=12, bands=12)
-    )
-    pairs = candidate_pairs(blocked)
-
-    def feats(recs, dim):
-        return sorted(
-            (r["rec_id_a"], r["rec_id_b"], r["cos_bow"])
-            for r in pair_features(
-                pairs, recs, name_col="anchor", dense_bow_dim=dim
-            ).collect()
-        )
-
-    # short contexts: auto == exact sparse
-    assert feats(records, "auto") == feats(records, None)
-
-    # long contexts (>32 tokens): auto == explicit dense 64
-    long_recs = records.withColumn(
-        "text",
-        F.concat_ws(
-            " ", F.array([F.concat(F.col("text"), F.lit(f"x{i}")) for i in range(40)])
-        ),
-    )
-    assert feats(long_recs, "auto") == feats(long_recs, 64)
-
-    # unknown knob values fail fast at validation, not later in the plan
-    import pytest as _pytest
-
-    for bad in ("dense", -1, 0, 1.5, True):
-        with _pytest.raises(ValueError, match="dense_bow_dim"):
-            pair_features(pairs, records, name_col="anchor", dense_bow_dim=bad)
 
 
 def test_pair_features_no_cache_without_receiver(spark):
@@ -795,42 +724,23 @@ def test_skyline_2d_dominance_and_ties(spark):
     assert set(skyline_2d(df, "s1", "s2").columns) == {"id", "s1", "s2"}
 
 
-def _ref_cos(ta, tb, dim):
-    """Driver-side hashed-BoW cosine straight from vw_tok + crc32: the
-    reference the shared vector table is checked against."""
-    import math
-    import zlib
-    from collections import Counter
-
-    from minimel_spark.functions.normalize import vw_tok
-    from minimel_spark.operators.pairs import BOW_DIM
-
-    def vec(t):
-        return Counter(
-            zlib.crc32(tok.encode("utf-8")) % (dim or BOW_DIM)
-            for tok in vw_tok(t or "")
-        )
-
-    a, b = vec(ta), vec(tb)
-    na = math.sqrt(sum(x * x for x in a.values()))
-    nb = math.sqrt(sum(x * x for x in b.values()))
-    if not na or not nb:
-        return 0.0
-    return sum(x * b[k] for k, x in a.items()) / (na * nb)
-
-
 def test_pair_features_distinct_text_build_matches_join_fallback(spark):
     """The cos_bow table has one row per DISTINCT text with the list of
     record ids carrying it. Values must be bit-identical between the
-    broadcast and the join path on both the sparse and the dense path, and
-    match a driver-side cosine, whether texts repeat across records or every
-    record has its own text; missing-id pairs must still drop, and null text
-    must fold into the empty-text group losslessly."""
+    broadcast and the join path, invariant to the records' partitioning, and
+    equal to the exact driver-side cosine, whether texts repeat across
+    records, every record has its own text, or contexts are long (40+
+    tokens); missing-id pairs must still drop, and null text must fold into
+    the empty-text group losslessly."""
     shared = ["alpha beta gamma", "beta gamma delta epsilon", None, ""]
     corpora = {
         "shared": [shared[i % 4] for i in range(40)],
         "distinct": [None, ""]
         + [f"w{i} s{i % 3} t{i % 5} s{i % 3}" for i in range(2, 40)],
+        "long": [
+            " ".join(f"w{(i + j) % 50} s{j % (i % 4 + 2)}" for j in range(24))
+            for i in range(40)
+        ],
     }
     pair_rows = [
         (a, b, 1) for a in range(40) for b in (a + 1, a + 7, a + 13) if b < 40
@@ -846,23 +756,21 @@ def test_pair_features_distinct_text_build_matches_join_fallback(spark):
             "rec_id long, name string, text string",
         )
 
-        def run(**kw):
+        def run(recs, **kw):
             return {
                 (r["rec_id_a"], r["rec_id_b"]): r["cos_bow"]
                 for r in pair_features(
-                    pairs, records, name_col="name", **kw
+                    pairs, recs, name_col="name", **kw
                 ).collect()
             }
 
-        for dim in (None, 8):
-            bcast = run(dense_bow_dim=dim)
-            fallback = run(dense_bow_dim=dim, max_broadcast_vec_bytes=None)
-            assert bcast == fallback, (kind, dim)
-            assert set(bcast) == want_keys, (kind, dim)  # (0, 999) dropped
-            for (a, b), c in bcast.items():
-                assert c == pytest.approx(
-                    _ref_cos(texts[a], texts[b], dim), abs=1e-12
-                ), (kind, dim, a, b)
+        bcast = run(records)
+        assert set(bcast) == want_keys, kind  # (0, 999) dropped
+        assert run(records, max_broadcast_vec_bytes=None) == bcast, kind
+        assert run(records.repartition(5)) == bcast, kind
+        keys = sorted(bcast)
+        want = ref_cos_bow([texts[a] for a, _ in keys], [texts[b] for _, b in keys])
+        assert [bcast[k] for k in keys] == pytest.approx(want.tolist(), abs=1e-12), kind
 
 
 def test_pair_features_skewed_texts_size_exactly(spark):

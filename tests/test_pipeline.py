@@ -1,6 +1,7 @@
 """End-to-end pipeline tests: full DAG on the synthetic fixture, checkpoint
 resume, scoring, evaluation metrics."""
 
+import numpy as np
 import pyspark.sql.functions as F
 import pytest
 
@@ -17,6 +18,8 @@ from minimel_spark.operators.scoring import (
 )
 from minimel_spark.pipeline import PipelineConfig, run_pipeline
 from minimel_spark.sources.synth import synth_pages, synth_title_index
+
+from conftest import ref_cos_bow
 
 
 @pytest.fixture(scope="module")
@@ -40,6 +43,11 @@ def test_pipeline_all_stages_produce_rows(pipeline_result):
     out, *_ = pipeline_result
     for stage in STAGES:
         assert out[stage].count() > 0, f"stage {stage} empty"
+    # committed cos_bow is the exact hashed-BoW cosine of the two records' texts
+    text = dict(out["records"].select("rec_id", "text").collect())
+    f = out["pair_features"].select("rec_id_a", "rec_id_b", "cos_bow").toPandas()
+    want = ref_cos_bow(f["rec_id_a"].map(text), f["rec_id_b"].map(text))
+    assert np.abs(f["cos_bow"].to_numpy() - want).max() <= 1e-12
 
 
 def test_checkpoint_lineage_describes_committed_files(spark, pipeline_result):
