@@ -57,17 +57,32 @@ def train_pair_matcher(
     return Pipeline(stages=[assembler, lr]).fit(df)
 
 
+def logistic_score(
+    features: DataFrame,
+    coefficients,
+    intercept: float,
+    feature_cols: list[str] | None = None,
+) -> DataFrame:
+    """Add ``score`` = sigmoid(Σ coef_i·x_i + intercept) over ``feature_cols``
+    (default ``FEATURE_COLS``), the exact binomial ``raw2probability``
+    arithmetic of a fitted LR, accumulated in coefficient order as one
+    codegen'd column expression (guide §4.1: built-ins over opaque ML
+    transforms on the hot path)."""
+    margin = F.lit(0.0)
+    for c, w in zip(feature_cols or FEATURE_COLS, coefficients):
+        margin = margin + F.col(c).cast("double") * F.lit(float(w))
+    margin = margin + F.lit(float(intercept))
+    return features.withColumn("score", F.lit(1.0) / (F.lit(1.0) + F.exp(-margin)))
+
+
 def score_pairs(model, features: DataFrame) -> DataFrame:
     """Apply the matcher; adds ``score`` = P(match).
 
-    For the standard assembler + binary-LR pipeline the transform is
-    inlined as a codegen'd column expression (r6, guide §4.1: built-ins
-    over opaque ML transforms on the hot path): score =
-    sigmoid(Σ coef_i·x_i + intercept), the exact binomial
-    ``raw2probability`` arithmetic, accumulated in coefficient order —
-    this skips materializing four ML vector columns (features,
-    rawPrediction, probability, prediction) per pair row. Any other model
-    shape falls back to ``model.transform``.
+    For the standard assembler + binary-LR pipeline this is
+    ``logistic_score`` over the model's coefficients (r6), which skips
+    materializing four ML vector columns (features, rawPrediction,
+    probability, prediction) per pair row. Any other model shape falls back
+    to ``model.transform``.
     """
     stages = getattr(model, "stages", None)
     if stages and len(stages) == 2:
@@ -79,12 +94,8 @@ def score_pairs(model, features: DataFrame) -> DataFrame:
             and lr.numClasses == 2
             and hasattr(assembler, "getInputCols")
         ):
-            margin = F.lit(0.0)
-            for c, w in zip(assembler.getInputCols(), lr.coefficients):
-                margin = margin + F.col(c).cast("double") * F.lit(float(w))
-            margin = margin + F.lit(float(lr.intercept))
-            return features.withColumn(
-                "score", F.lit(1.0) / (F.lit(1.0) + F.exp(-margin))
+            return logistic_score(
+                features, lr.coefficients, lr.intercept, assembler.getInputCols()
             )
     from pyspark.ml.functions import vector_to_array
 

@@ -137,9 +137,31 @@ class Checkpointer:
 
     def write_manifest(self, params: dict) -> None:
         """X2 analogue: machine-readable run parameters instead of the
-        reference's params-in-dirname encoding (experiment.py:47-69)."""
-        with open(os.path.join(self.base, "manifest.json"), "w") as f:
-            json.dump(params, f, indent=2, sort_keys=True, default=str)
+        reference's params-in-dirname encoding (experiment.py:47-69).
+
+        The run that starts the workdir writes them. A later run resumes its
+        committed stages, so it must pass the same parameters: on any
+        difference this raises ``ValueError`` naming the differing fields and
+        leaves the manifest as it is. Both sides are compared after the JSON
+        round trip, so a tuple equals the list it is stored as."""
+        path = os.path.join(self.base, "manifest.json")
+        text = json.dumps(params, indent=2, sort_keys=True, default=str)
+        if not os.path.exists(path):
+            with open(path, "w") as f:
+                f.write(text)
+            return
+        with open(path) as f:
+            have = json.load(f)
+        want = json.loads(text)
+        # ``...`` marks an absent field: no JSON value equals it
+        diff = sorted(
+            k for k in have.keys() | want.keys() if have.get(k, ...) != want.get(k, ...)
+        )
+        if diff:
+            raise ValueError(
+                f"{self.base} was committed with other parameters; differing "
+                f"fields: {', '.join(diff)}. Use a fresh workdir."
+            )
 
 
 def logical_lineage(

@@ -32,22 +32,60 @@ def pipeline_result(spark, tmp_path_factory):
     return out, workdir, pages, index, cfg
 
 
-STAGES = [
+# the stages a checkpointed run commits, and the tables run_pipeline returns
+# (``pairs`` and ``scored_pairs`` are views over committed ``pair_features``)
+COMMITTED = [
+    "paragraphs", "anchor_counts", "candidates", "name_clusters",
+    "mentions", "records", "pair_features", "matcher", "er_clusters",
+]
+TABLES = [
     "paragraphs", "anchor_counts", "candidates", "name_clusters",
     "mentions", "records", "pairs", "pair_features", "scored_pairs",
     "er_clusters",
 ]
 
 
+def committed_tables(spark, out, workdir):
+    """The returned tables plus the committed ``matcher`` row."""
+    import os
+
+    return dict(out, matcher=spark.read.parquet(os.path.join(workdir, "matcher")))
+
+
 def test_pipeline_all_stages_produce_rows(pipeline_result):
     out, *_ = pipeline_result
-    for stage in STAGES:
+    for stage in TABLES:
         assert out[stage].count() > 0, f"stage {stage} empty"
     # committed cos_bow is the exact hashed-BoW cosine of the two records' texts
     text = dict(out["records"].select("rec_id", "text").collect())
     f = out["pair_features"].select("rec_id_a", "rec_id_b", "cos_bow").toPandas()
     want = ref_cos_bow(f["rec_id_a"].map(text), f["rec_id_b"].map(text))
     assert np.abs(f["cos_bow"].to_numpy() - want).max() <= 1e-12
+
+
+def test_pipeline_pair_views_over_committed_features(spark, pipeline_result):
+    """The pair stream is committed once: ``pairs`` is a projection of
+    committed ``pair_features``, and ``scored_pairs`` adds the logistic score
+    of the committed ``matcher`` row."""
+    import os
+
+    from minimel_spark.operators.scoring import FEATURE_COLS
+
+    out, workdir, *_ = pipeline_result
+    assert sorted(os.listdir(workdir)) == sorted(COMMITTED + ["_metrics", "manifest.json"])
+    feats = spark.read.parquet(os.path.join(workdir, "pair_features"))
+    cols = ["rec_id_a", "rec_id_b", "n_blocks", "name_a", "name_b"]
+    assert out["pairs"].columns == cols
+    assert sorted(map(tuple, out["pairs"].collect())) == sorted(
+        map(tuple, feats.select(*cols).collect())
+    )
+    (m,) = spark.read.parquet(os.path.join(workdir, "matcher")).collect()
+    assert len(m["coefficients"]) == len(FEATURE_COLS)
+    s = out["scored_pairs"].select(*FEATURE_COLS, "score").toPandas()
+    margin = s[FEATURE_COLS].to_numpy() @ np.array(m["coefficients"]) + m["intercept"]
+    want = 1.0 / (1.0 + np.exp(-margin))
+    assert len(s) == feats.count()
+    assert np.abs(s["score"].to_numpy() - want).max() <= 1e-12
 
 
 def test_checkpoint_lineage_describes_committed_files(spark, pipeline_result):
@@ -57,35 +95,40 @@ def test_checkpoint_lineage_describes_committed_files(spark, pipeline_result):
     import os
 
     out, workdir, *_ = pipeline_result
+    tables = committed_tables(spark, out, workdir)
+    assert tables["matcher"].schema.simpleString() == (
+        "struct<coefficients:array<double>,intercept:double>"
+    )
     lineage: dict = {}
     for r in out["metrics"].collect():
         lineage.setdefault(r["stage"], []).append((r["partition_id"], r["rows"]))
-    for stage in STAGES:
+    for stage in COMMITTED:
         path = os.path.join(workdir, stage)
         part_ids = {
             int(f.split("-")[1]) for f in os.listdir(path) if f.startswith("part-")
         }
         ids = [p for p, _ in lineage[stage]]
         assert sorted(ids) == sorted(part_ids), stage
-        assert sum(n for _, n in lineage[stage]) == out[stage].count(), stage
-        assert out[stage].schema == spark.read.parquet(path).schema, stage
+        assert sum(n for _, n in lineage[stage]) == tables[stage].count(), stage
+        assert tables[stage].schema == spark.read.parquet(path).schema, stage
 
 
 def test_checkpoint_resume_reads_every_stage_without_recompute(spark, pipeline_result):
     from minimel_spark.sources.checkpoint import Checkpointer
 
     out, workdir, *_ = pipeline_result
+    tables = committed_tables(spark, out, workdir)
 
     def recompute():
         raise AssertionError("resume recomputed a committed stage")
 
     ckpt = Checkpointer(spark, workdir)
     n_lineage = ckpt.metrics().count()
-    for stage in STAGES:
+    for stage in COMMITTED:
         got = ckpt.stage(stage, recompute)
-        assert got.schema == out[stage].schema, stage
-        assert got.count() == out[stage].count(), stage
-        assert ckpt.committed_rows(stage, got) == out[stage].count(), stage
+        assert got.schema == tables[stage].schema, stage
+        assert got.count() == tables[stage].count(), stage
+        assert ckpt.committed_rows(stage, got) == tables[stage].count(), stage
     # a resumed stage adds no lineage rows
     assert ckpt.metrics().count() == n_lineage
 
@@ -101,12 +144,39 @@ def test_pipeline_metrics_lineage(pipeline_result):
 
 
 def test_pipeline_resume_uses_checkpoints(spark, pipeline_result):
+    from minimel_spark.operators.scoring import match_edges
+
     out, workdir, pages, index, cfg = pipeline_result
     # second run must read committed stages, not recompute: feed EMPTY pages —
     # if any stage recomputed, row counts would change
     empty = pages.where(F.lit(False))
     out2 = run_pipeline(spark, empty, index, workdir=workdir, config=cfg)
     assert out2["er_clusters"].count() == out["er_clusters"].count()
+
+    def edges(o):
+        return sorted(map(tuple, match_edges(o["scored_pairs"], cfg.match_threshold).collect()))
+
+    assert edges(out2) == edges(out)
+
+
+def test_pipeline_resume_refuses_changed_config(spark, pipeline_result, tmp_path):
+    """A workdir resumes only the config that committed it: a rerun with
+    another ``min_count`` raises naming the field and leaves the manifest
+    as it was."""
+    import os
+    import shutil
+
+    _, workdir, pages, index, _ = pipeline_result
+    copy = str(tmp_path / "ck")
+    shutil.copytree(workdir, copy)
+    manifest = os.path.join(copy, "manifest.json")
+    with open(manifest, "rb") as f:
+        before = f.read()
+    changed = PipelineConfig(min_count=5, bands=6, num_hashes=12)
+    with pytest.raises(ValueError, match="min_count"):
+        run_pipeline(spark, pages, index, workdir=copy, config=changed)
+    with open(manifest, "rb") as f:
+        assert f.read() == before
 
 
 def test_pipeline_tiny_budgets_identical_clusters(spark, pipeline_result, tmp_path):
@@ -130,12 +200,18 @@ def test_pipeline_pivot_cluster_method(spark, pipeline_result, tmp_path):
     stars over the SAME match edges: every record is assigned exactly once,
     and every non-pivot member is DIRECTLY adjacent to its pivot in the
     thresholded match-edge graph (the radius-1 guarantee transitive
-    closure deliberately does not give)."""
+    closure deliberately does not give). It resumes a copy of the
+    transitive run's workdir: the method is the one field a resume may
+    change, because the pivot stage commits under its own name."""
+    import shutil
+
     from minimel_spark.pipeline import match_edges
 
-    out, _, pages, index, cfg = pipeline_result
+    _, workdir, pages, index, cfg = pipeline_result
+    copy = str(tmp_path / "ckp")
+    shutil.copytree(workdir, copy)
     piv_cfg = PipelineConfig(min_count=2, bands=6, num_hashes=12, cluster_method="pivot")
-    out2 = run_pipeline(spark, pages, index, workdir=str(tmp_path / "ckp"), config=piv_cfg)
+    out2 = run_pipeline(spark, pages, index, workdir=copy, config=piv_cfg)
     memb = {r["rec_id"]: r["cluster_id"] for r in out2["er_clusters"].collect()}
     recs = {r["rec_id"] for r in out2["records"].select("rec_id").collect()}
     assert set(memb) == recs
@@ -154,8 +230,8 @@ def test_pipeline_pivot_cluster_method(spark, pipeline_result, tmp_path):
 def test_pipeline_no_ambiguous_anchor_commits_empty_tail(spark, pipeline_result, tmp_path):
     """A world where every anchor links one entity: clean() keeps no
     ambiguous anchor, so there are no mentions, records or pairs. Training is
-    skipped and scored_pairs / er_clusters commit empty, with the schemas of
-    a normal run."""
+    skipped, matcher commits no row, and scored_pairs / er_clusters come out
+    empty, with the schemas of a normal run."""
     import datetime
 
     out, *_ = pipeline_result
@@ -179,6 +255,7 @@ def test_pipeline_no_ambiguous_anchor_commits_empty_tail(spark, pipeline_result,
     )
     assert got["anchor_counts"].count() > 0
     assert got["candidates"].count() == 0
+    assert spark.read.parquet(str(tmp_path / "ck" / "matcher")).count() == 0
     for stage in ("pair_features", "scored_pairs", "er_clusters"):
         assert got[stage].count() == 0, stage
     for stage in ("scored_pairs", "er_clusters"):
