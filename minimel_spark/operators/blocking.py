@@ -173,12 +173,6 @@ def union_blocks(*blocked: DataFrame) -> DataFrame:
     return out
 
 
-def _maybe_broadcast(df: DataFrame, use_broadcast: bool) -> DataFrame:
-    """Forced broadcast hint, or the plain DataFrame (shuffle join; AQE may
-    still choose broadcast from runtime stats) when the side is over budget."""
-    return F.broadcast(df) if use_broadcast else df
-
-
 def surface_blocked_pairs(
     records: DataFrame,
     key_col: str = "name",
@@ -186,7 +180,6 @@ def surface_blocked_pairs(
     num_hashes: int = 12,
     bands: int = 6,
     max_pairs_per_block: int = 10_000,
-    max_broadcast_names: int | None = 5_000_000,
     persisted_out: list | None = None,
 ) -> DataFrame:
     """Candidate record pairs when every block key is a function of the
@@ -222,25 +215,22 @@ def surface_blocked_pairs(
     ``n_blocks`` = number of name-level keys proposing the pair (cross-name),
     or the number of shared keys for same-name pairs (bands + dictionary).
 
-    The name-dictionary side tables are only broadcast-HINTED while the
-    dictionary holds at most ``max_broadcast_names`` entries (one cheap count
-    on the persisted name table); past the budget the joins degrade to
-    shuffle joins instead of forcing a multi-GB broadcast (pass ``None`` to
-    always hint). The name table is persisted either way — it feeds four
-    separate subplans (bands, salting, sizes, ranking), so caching it avoids
-    re-running the records groupBy per consumer. The cache must outlive the
-    returned lazy plan, so it cannot be unpersisted here; pass
-    ``persisted_out`` (a list) to receive it and unpersist once the
-    downstream job has materialized (ADVICE r3: otherwise caches accumulate
-    for the session across repeated pipeline invocations).
+    The joins carry no broadcast hint: the name table is persisted and
+    counted, so Catalyst plans them from the cached table's measured size
+    (broadcast under ``spark.sql.autoBroadcastJoinThreshold``, shuffle past
+    it). The cache also feeds four separate subplans (bands, salting, sizes,
+    ranking), so the records groupBy runs once. It must outlive the returned
+    lazy plan, so it cannot be unpersisted here; pass ``persisted_out`` (a
+    list) to receive it and unpersist once the downstream job has
+    materialized (ADVICE r3: otherwise caches accumulate for the session
+    across repeated pipeline invocations).
     """
     names = records.groupBy(key_col).agg(F.count(F.lit(1)).alias("_n_rec"))
     names = names.withColumn("_n_sh", F.size(shingles_udf(F.col(key_col)))).persist()
     if persisted_out is not None:
         persisted_out.append(names)
-    use_bcast = (
-        max_broadcast_names is None or names.count() <= max_broadcast_names
-    )
+    # fills the cache, so the joins below are planned from its real size
+    names.count()
 
     # --- name-level blocks: dictionary for shingle-less names, LSH bands else
     nb = union_blocks(
@@ -260,7 +250,7 @@ def surface_blocked_pairs(
     # at web scale this frame is records-sized, so caching it would cost
     # more than three narrow columnar scans.
     salted = records.select(key_col, rec_id_col).join(
-        _maybe_broadcast(multi.select(key_col, "_nsalt", "_n_sh"), use_bcast), key_col
+        multi.select(key_col, "_nsalt", "_n_sh"), key_col
     ).withColumn("_salt", F.pmod(F.xxhash64(F.col(rec_id_col)), F.col("_nsalt")))
     sa = salted.select(
         F.col(key_col).alias("_k"),
@@ -336,17 +326,11 @@ def surface_blocked_pairs(
     sizes = names.select(key_col, "_n_rec")
     name_pairs = (
         name_pairs.join(
-            _maybe_broadcast(
-                sizes.select(F.col(key_col).alias("_na"), F.col("_n_rec").alias("_nra")),
-                use_bcast,
-            ),
+            sizes.select(F.col(key_col).alias("_na"), F.col("_n_rec").alias("_nra")),
             "_na",
         )
         .join(
-            _maybe_broadcast(
-                sizes.select(F.col(key_col).alias("_nb"), F.col("_n_rec").alias("_nrb")),
-                use_bcast,
-            ),
+            sizes.select(F.col(key_col).alias("_nb"), F.col("_n_rec").alias("_nrb")),
             "_nb",
         )
         .withColumn(

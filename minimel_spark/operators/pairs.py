@@ -25,7 +25,6 @@ Feature computation is O(records + distinct-name-pairs), not O(pairs):
 
 from __future__ import annotations
 
-import os
 import zlib
 
 import pandas as pd
@@ -43,12 +42,9 @@ BOW_DIM = 1 << 18
 # measured exactly on the persisted table, fits this budget, the pair dot
 # product is computed by a vectorized Arrow UDF over ONLY the two 8-byte id
 # columns against a broadcast numpy table — no join of the (much larger)
-# pair table at all. Past the budget the join path runs. Parameterised via
-# env for deployments; 128 MiB is the same dimension-table magnitude as the
-# session's autoBroadcastJoinThreshold.
-DEFAULT_VEC_BCAST_BYTES = int(
-    os.environ.get("MINIMEL_VEC_BCAST_BYTES", str(128 << 20))
-)
+# pair table at all. Past the budget the join path runs. 128 MiB is the same
+# dimension-table magnitude as the session's autoBroadcastJoinThreshold.
+DEFAULT_VEC_BCAST_BYTES = 128 << 20
 
 _FEATURE_COLS = (
     "rec_id_a", "rec_id_b", "n_blocks", "name_a", "name_b",
@@ -222,9 +218,11 @@ def pair_features(
     evaluate that twice on the hot path; without a receiver nothing is
     pinned, so repeated no-receiver calls cannot leak caches) and only
     broadcast-HINTED while it holds at most ``max_broadcast_name_pairs``
-    rows; past the budget (LSH-banded cross-name pairs at web scale) the
-    join back degrades to a shuffle join instead of a forced multi-GB
-    broadcast. ``None`` always hints.
+    rows, counted on the table itself; past the budget (LSH-banded
+    cross-name pairs at web scale) the join back degrades to a shuffle join
+    instead of a forced multi-GB broadcast. ``None`` always hints. The hint
+    is kept because Spark cannot size this side itself: uncached, its
+    static estimate grows through the pair join and loses the broadcast.
 
     ``max_broadcast_vec_bytes``: ``cos_bow`` reads ONE persisted vector
     table with a row per distinct text and the list of record ids carrying
@@ -238,9 +236,9 @@ def pair_features(
     heavy payload out of the pair stream). Past the budget the same table is
     exploded to one row per record for two shuffle joins and the JVM fold.
     The broadcast path agrees with the join path to float associativity
-    (same addend sequence, ``np.add.reduceat`` reduction). ``None`` disables the broadcast path
-    outright; the default is the ``MINIMEL_VEC_BCAST_BYTES`` env knob (128
-    MiB). Records are assumed to carry unique ``rec_id_col`` values.
+    (same addend sequence, ``np.add.reduceat`` reduction). ``None`` disables
+    the broadcast path outright; the default is ``DEFAULT_VEC_BCAST_BYTES``
+    (128 MiB). Records are assumed to carry unique ``rec_id_col`` values.
     """
     if persisted_out is not None:
         # the pair stream feeds TWO subplans (the distinct name-pair branch

@@ -47,6 +47,16 @@ from .operators.scoring import (
 )
 from .sources.checkpoint import Checkpointer
 
+# Row budget of the three gates that guard what Spark does not size for us:
+# the title dict extract_paragraphs pulls to the driver, the anchor automaton
+# detect_mentions builds on the driver, and pair_features' broadcast hint on
+# the name-pair features (uncached, as library callers leave that table, its
+# static size estimate grows through the pair join and Spark would shuffle
+# it). Every other join is left to Catalyst, which broadcasts a side under
+# spark.sql.autoBroadcastJoinThreshold from the size it measured; for the
+# blocking name table that is the counted cache.
+MAX_BROADCAST_ROWS = 5_000_000
+
 
 @dataclass
 class PipelineConfig:
@@ -60,18 +70,6 @@ class PipelineConfig:
     max_anchors_per_entity: int | None = None
     balanced: bool = True
     skip_prefixes: tuple = ()
-    # over-budget auto-routing (VERDICT r2 #3): past these entry budgets the
-    # production DAG degrades to the joined/chunked/shuffle twins instead of
-    # forcing unbounded broadcasts. detect_mentions additionally auto-chunks
-    # on its byte estimate even when max_broadcast_names is None.
-    # NB the None semantics DIFFER by stage (ADVICE r3): for detect_mentions
-    # None means "byte-estimate auto-chunking"; for surface_blocked_pairs the
-    # separate blocking_broadcast_names budget applies, where None means
-    # "always add the broadcast hint".
-    max_broadcast_titles: int | None = 5_000_000
-    max_broadcast_names: int | None = None
-    max_broadcast_name_pairs: int | None = 5_000_000
-    blocking_broadcast_names: int | None = 5_000_000
     # final entity-formation semantics over the match edges:
     # "transitive" (default, the reference's closure semantics — chains
     # A~B~C into one entity) or "pivot" (KwikCluster correlation
@@ -145,9 +143,7 @@ def run_pipeline(
             f"cluster_method must be 'transitive' or 'pivot', got "
             f"{cfg.cluster_method!r}"
         )
-    ckpt = Checkpointer(spark, workdir, enabled=bool(workdir)) if workdir else Checkpointer(
-        spark, "/tmp/minimel_spark_noop", enabled=False
-    )
+    ckpt = Checkpointer(spark, workdir or None)
     if workdir:
         # a workdir resumes only the config that committed it
         ckpt.write_manifest(
@@ -165,7 +161,7 @@ def run_pipeline(
             pages,
             title_index,
             cfg.skip_prefixes,
-            max_broadcast_titles=cfg.max_broadcast_titles,
+            max_broadcast_titles=MAX_BROADCAST_ROWS,
         ),
     )
     counts = ckpt.stage(
@@ -197,7 +193,7 @@ def run_pipeline(
         lambda: detect_mentions(
             paragraphs,
             candidates.select("anchor").distinct(),
-            max_broadcast_names=cfg.max_broadcast_names,
+            max_broadcast_names=MAX_BROADCAST_ROWS,
         ),
     )
 
@@ -231,7 +227,6 @@ def run_pipeline(
             num_hashes=cfg.num_hashes,
             bands=cfg.bands,
             max_pairs_per_block=cfg.max_pairs_per_block,
-            max_broadcast_names=cfg.blocking_broadcast_names,
             persisted_out=persisted,
         )
         # The blocking output is the union of two post-shuffle streams
@@ -246,7 +241,7 @@ def run_pipeline(
             pairs.coalesce(int(spark.conf.get("spark.sql.shuffle.partitions"))),
             records,
             name_col="name",
-            max_broadcast_name_pairs=cfg.max_broadcast_name_pairs,
+            max_broadcast_name_pairs=MAX_BROADCAST_ROWS,
             persisted_out=persisted,
         )
 

@@ -68,11 +68,14 @@ def _part_rows(path: str) -> dict[int, int]:
 
 
 class Checkpointer:
-    def __init__(self, spark: SparkSession, base_dir: str, enabled: bool = True):
+    """Commits stages under ``base_dir``; with ``base_dir=None`` it is
+    disabled: every stage is built lazily and nothing touches the disk."""
+
+    def __init__(self, spark: SparkSession, base_dir: str | None):
         self.spark = spark
         self.base = base_dir
-        self.enabled = enabled
-        os.makedirs(base_dir, exist_ok=True)
+        if base_dir is not None:
+            os.makedirs(base_dir, exist_ok=True)
 
     def _path(self, stage: str) -> str:
         return os.path.join(self.base, stage)
@@ -86,7 +89,7 @@ class Checkpointer:
         X3 skip-if-exists semantics: an already-committed stage is read back,
         never recomputed — the resume contract.
         """
-        if not self.enabled:
+        if self.base is None:
             return build()
         path = self._path(name)
         if self.has(name):
@@ -101,7 +104,7 @@ class Checkpointer:
     def committed_rows(self, stage: str, df: DataFrame) -> int:
         """Row count of ``stage``: summed from its part-file footers once it
         is committed (no job), else ``df.count()`` (checkpointing off)."""
-        if self.enabled and self.has(stage):
+        if self.base is not None and self.has(stage):
             return sum(_part_rows(self._path(stage)).values())
         return df.count()
 
@@ -130,6 +133,8 @@ class Checkpointer:
         os.replace(tmp, os.path.join(out_dir, name))
 
     def metrics(self) -> DataFrame | None:
+        if self.base is None:
+            return None
         p = os.path.join(self.base, "_metrics")
         if not os.path.exists(p):
             return None
