@@ -283,8 +283,9 @@ FROM pos JOIN (SELECT DISTINCT word FROM words WHERE length(word) > 3) d USING (
 
 
 def q_er_anchor_counts_joined(spark, sf_dir):
-    """The over-budget TITLE-INDEX path (extract_paragraphs_joined: per-page
-    candidate targets resolved by a distributed equi-join, no driver dict)
+    """The over-budget TITLE-INDEX path (extract_paragraphs past
+    max_broadcast_titles: per-page candidate targets resolved by
+    title_lookups' distributed equi-join, no driver dict)
     must produce the exact same anchor statistics — same oracle as
     er_anchor_counts, so any byte-divergence of the joined path fails the
     hash compare."""

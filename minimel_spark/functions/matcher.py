@@ -2,27 +2,40 @@
 
 Reference: minimel/mentions.py:16-45 — an ahocorasick_rs automaton with
 ``MatchKind.LeftmostLongest`` plus a word-boundary post-filter (prev/next char
-non-alphanumeric). This module reproduces those semantics three ways, all
-contract-identical (property-tested against each other):
+non-alphanumeric). This module reproduces those semantics with one name trie
+(``name_trie``) and two scanners over it, property-tested equal:
 
-- ``ahocorasick_rs`` when importable (the reference's own Rust automaton);
-- ``RegexMatcher`` (the default fallback): the name trie is compiled into a
+- ``RegexMatcher`` (the production scanner): the trie is compiled into a
   single regex whose greedy optional-suffix structure makes Python's ``re``
   engine (C speed) return exactly the leftmost-longest non-overlapping match
   sequence — ``finditer`` resumes after each match end, which is the same
   consumption rule as the automaton. 10-50x faster than the per-character
   Python trie scan on web-scale text passes;
-- ``TrieMatcher``: the per-character pure-Python reference implementation,
-  kept as the executable spec the other two are tested against.
+- ``TrieMatcher``: the per-character pure-Python scan, kept as the
+  executable spec the regex is tested against.
 
-All are built ONCE per executor from a broadcast name list and reused across
-Arrow batches (the executor-singleton pattern the reference uses per dask
-partition, mentions.py:55).
+The scanner is built ONCE per executor task from a broadcast name list and
+reused across Arrow batches (the executor-singleton pattern the reference
+uses per dask partition, mentions.py:55).
 """
 
 from __future__ import annotations
 
 import re
+
+
+def name_trie(names) -> dict:
+    """Nested-dict trie of ``names``; the key ``""`` marks a terminal. Empty
+    names are skipped: a zero-length match never fires in any scanner."""
+    root: dict = {}
+    for name in names:
+        if not name:
+            continue
+        node = root
+        for ch in name:
+            node = node.setdefault(ch, {})
+        node[""] = True
+    return root
 
 
 class TrieMatcher:
@@ -32,13 +45,7 @@ class TrieMatcher:
     __slots__ = ("root",)
 
     def __init__(self, names):
-        root: dict = {}
-        for name in names:
-            node = root
-            for ch in name:
-                node = node.setdefault(ch, {})
-            node[""] = True  # terminal
-        self.root = root
+        self.root = name_trie(names)
 
     def find_matches(self, text: str):
         """Yield (start, surface) — surface is the matched slice of ``text``.
@@ -113,14 +120,7 @@ class RegexMatcher:
     __slots__ = ("pattern",)
 
     def __init__(self, names):
-        root: dict = {}
-        for name in names:
-            if not name:
-                continue
-            node = root
-            for ch in name:
-                node = node.setdefault(ch, {})
-            node[""] = True
+        root = name_trie(names)
         self.pattern = re.compile(_trie_regex(root)) if root else None
 
     def find_matches(self, text: str):
@@ -136,33 +136,3 @@ class RegexMatcher:
             if end != n and text[end].isalnum():
                 continue
             yield (start, text[start:end])
-
-
-def build_matcher(names, impl: str = "auto"):
-    """Prefer the Rust automaton when available, then the trie-compiled regex
-    (contract-identical; ``impl`` forces 'trie' or 'regex' for testing)."""
-    if impl == "trie":
-        return TrieMatcher(names)
-    if impl == "regex":
-        return RegexMatcher(names)
-    try:  # pragma: no cover - optional fast path
-        from ahocorasick_rs import AhoCorasick, Implementation, MatchKind
-
-        ac = AhoCorasick(
-            list(names),
-            matchkind=MatchKind.LeftmostLongest,
-            implementation=Implementation.NoncontiguousNFA,
-        )
-
-        class _ACWrap:
-            def find_matches(self, text):
-                for _, start, end in ac.find_matches_as_indexes(text):
-                    if start != 0 and text[start - 1].isalnum():
-                        continue
-                    if end != len(text) and text[end].isalnum():
-                        continue
-                    yield (start, text[start:end])
-
-        return _ACWrap()
-    except ImportError:
-        return RegexMatcher(names)

@@ -163,6 +163,11 @@ def _walk(nodes):
             yield from _walk(node.contents)
 
 
+def page_name(url: str) -> str:
+    """The page title a wiki URL names (last path segment, query dropped)."""
+    return url.rsplit("/", 1)[-1].split("?")[0]
+
+
 def canonical_title(t: str) -> str | None:
     """Reference title canonicalization (get_paragraphs.py:47-54): drop
     Namespace: titles, uppercase the first char, spaces -> underscores.

@@ -22,8 +22,6 @@ dropping them is the standard stop-gram heuristic and keeps block sizes bounded.
 
 from __future__ import annotations
 
-import os
-
 import pandas as pd
 import pyspark.sql.functions as F
 import pyspark.sql.types as T
@@ -333,15 +331,11 @@ def minhash_dups(
     # this corpus's distinct shingle set (distinct counts equal), else the
     # verify falls back to the string arrays unchanged — so the operator's
     # exact-Jaccard contract is unconditional either way.
-    # MINIMEL_MINHASH_LONG_VERIFY=0 opts out (skips the pre-check pass too)
-    # for corpora where the verify is NOT the dominant cost.
-    use_long = os.environ.get("MINIMEL_MINHASH_LONG_VERIFY", "1") != "0"
-    if use_long:
-        chk = sh.select(F.explode("shingles").alias("_s")).agg(
-            F.countDistinct("_s").alias("_ns"),
-            F.countDistinct(F.xxhash64("_s")).alias("_nh"),
-        ).first()
-        use_long = chk["_ns"] == chk["_nh"]
+    chk = sh.select(F.explode("shingles").alias("_s")).agg(
+        F.countDistinct("_s").alias("_ns"),
+        F.countDistinct(F.xxhash64("_s")).alias("_nh"),
+    ).first()
+    use_long = chk["_ns"] == chk["_nh"]
     vsh = (
         sh.withColumn("shingles", F.transform("shingles", lambda s: F.xxhash64(s)))
         if use_long

@@ -7,23 +7,21 @@ clean()'s disambiguation boost consumes. Round 1 only accepted a PRE-BUILT
 disambig dimension; this operator builds it from raw pages, so a user with
 wikitext disambiguation dumps gets the reference behavior end to end.
 
-Plan shape: one scan -> mapInPandas (the parser is the same from-scratch
-wikitext module extraction uses; the title index is the same broadcast dict).
-Past ``max_broadcast_titles`` the JOINED twin runs instead (VERDICT r3 #3,
-mirroring ``extract_paragraphs_joined``): the per-page candidate list-link
-titles are resolved by a DISTRIBUTED equi-join and the parse consumes a
-per-page mini-dict — the driver never collects the index. Output feeds
+Plan shape: one scan -> mapInPandas over the same from-scratch wikitext
+module extraction uses, with the title index resolved by extraction's
+``title_lookups`` (broadcast within ``max_broadcast_titles``, a distributed
+join of each page's canonical list-link titles past it). Output feeds
 ``clean(..., disambig=...)``.
 """
 
 from __future__ import annotations
 
 import pandas as pd
-import pyspark.sql.functions as F
 import pyspark.sql.types as T
 from pyspark.sql import DataFrame
 
-from ..functions.wikitext import canonical_title, get_list_links
+from ..functions.wikitext import canonical_title, get_list_links, page_name
+from .extract import title_lookups
 
 DISAMBIG_SCHEMA = T.StructType([
     T.StructField("title", T.StringType()),
@@ -41,26 +39,24 @@ def disambig_from_pages(
     per disambiguation page; ``title`` is the disambiguation PAGE's name (the
     reference keys its output by page), ``qid`` the linked entity. A
     duplicated title in the index resolves deterministically to its MINIMUM
-    qid on both paths (a plain dict build would keep whichever row collected
-    last — partition-order dependent). When ``max_broadcast_titles`` is set
-    and the index is larger, routes to the contract-identical
-    ``disambig_from_pages_joined``."""
-    if max_broadcast_titles is not None and title_index.count() > max_broadcast_titles:
-        return disambig_from_pages_joined(pages, title_index, disambig_template)
-    spark = pages.sparkSession
-    index: dict[str, int] = {}
-    for r in title_index.collect():
-        t, q = r["title"], int(r["qid"])
-        if t not in index or q < index[t]:
-            index[t] = q
-    bc = spark.sparkContext.broadcast(index)
+    qid on both ``title_lookups`` paths."""
+
+    def list_titles(_name, text):
+        return {
+            c
+            for t in get_list_links(text, disambig_template)
+            if (c := canonical_title(t)) is not None
+        }
+
+    pages, lookups = title_lookups(
+        pages.select("url", "text"), title_index, list_titles, max_broadcast_titles
+    )
 
     def gen(batches):
-        idx = bc.value
         for pdf in batches:
             t_o, q_o = [], []
-            for url, mwcode in zip(pdf["url"], pdf["text"]):
-                page = url.rsplit("/", 1)[-1].split("?")[0]
+            for url, mwcode, idx in zip(pdf["url"], pdf["text"], lookups(pdf)):
+                page = page_name(url)
                 for t in get_list_links(mwcode, disambig_template):
                     c = canonical_title(t)
                     if c is not None and c in idx:
@@ -68,66 +64,4 @@ def disambig_from_pages(
                         q_o.append(idx[c])
             yield pd.DataFrame({"title": t_o, "qid": q_o})
 
-    return pages.select("url", "text").mapInPandas(gen, DISAMBIG_SCHEMA)
-
-
-def disambig_from_pages_joined(
-    pages: DataFrame,
-    title_index: DataFrame,
-    disambig_template: str | None = None,
-) -> DataFrame:
-    """Contract-identical to the broadcast path for title indexes beyond
-    broadcast budget: a cheap pre-scan emits each page's candidate list-link
-    titles (canonicalized with the parser's own helper, so the mini-dict
-    contains every key the parse can look up), a distributed equi-join
-    resolves them, and the parse consumes a per-page map column. No
-    driver-side collect of the index at any scale."""
-    cand_schema = T.StructType([
-        T.StructField("url", T.StringType()),
-        T.StructField("title", T.StringType()),
-    ])
-
-    def scan(batches):
-        for pdf in batches:
-            u_o, t_o = [], []
-            for url, mwcode in zip(pdf["url"], pdf["text"]):
-                seen = set()
-                for t in get_list_links(mwcode, disambig_template):
-                    c = canonical_title(t)
-                    if c is not None and c not in seen:
-                        seen.add(c)
-                        u_o.append(url)
-                        t_o.append(c)
-            yield pd.DataFrame({"url": u_o, "title": t_o})
-
-    cand = pages.select("url", "text").mapInPandas(scan, cand_schema)
-    resolved = (
-        cand.join(title_index.select("title", "qid"), "title")
-        # min-qid per title FIRST: map_from_entries raises on duplicate keys
-        # (mapKeyDedupPolicy=EXCEPTION), and array_distinct only collapses
-        # identical (title, qid) structs — a duplicated index title would
-        # otherwise crash the over-budget path that the broadcast path
-        # silently survives
-        .groupBy("url", "title")
-        .agg(F.min("qid").alias("qid"))
-        .groupBy("url")
-        .agg(
-            F.map_from_entries(F.collect_list(F.struct("title", "qid"))).alias("_idx")
-        )
-    )
-    pages2 = pages.select("url", "text").join(resolved, "url", "left")
-
-    def gen(batches):
-        for pdf in batches:
-            t_o, q_o = [], []
-            for url, mwcode, idx in zip(pdf["url"], pdf["text"], pdf["_idx"]):
-                page = url.rsplit("/", 1)[-1].split("?")[0]
-                d = {k: int(v) for k, v in idx.items()} if idx is not None else {}
-                for t in get_list_links(mwcode, disambig_template):
-                    c = canonical_title(t)
-                    if c is not None and c in d:
-                        t_o.append(page)
-                        q_o.append(d[c])
-            yield pd.DataFrame({"title": t_o, "qid": q_o})
-
-    return pages2.mapInPandas(gen, DISAMBIG_SCHEMA)
+    return pages.mapInPandas(gen, DISAMBIG_SCHEMA)

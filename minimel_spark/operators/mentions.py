@@ -1,11 +1,13 @@
 """Mention detection stage: paragraphs + anchor dictionary -> mentions
 (SURVEY §2 M1, A2, M3).
 
-Reference: minimel/mentions.py:16-60 and app/app.py:58-63. The automaton is
-built once per executor from the broadcast anchor list (iterator-form pandas
-UDF = the heavy-init executor-singleton pattern), scans lowercased text, and
-emits (start, surface) spans; matching is leftmost-longest with word-boundary
-filtering.
+Reference: minimel/mentions.py:16-60 and app/app.py:58-63. The reference
+scans with an Aho-Corasick automaton; here the anchor-name trie is compiled
+into one regex (``functions.matcher.RegexMatcher``) with the reference's
+leftmost-longest, word-boundary-filtered semantics. It is built once per
+executor task from the broadcast anchor list (iterator-form pandas UDF = the
+heavy-init executor-singleton pattern), scans lowercased text, and emits
+(start, surface) spans.
 
 Scale notes: the default path is shuffle-free — scan + mapInPandas with the
 anchor dictionary as one broadcast list (reference anchor dicts are ~10⁶
@@ -22,12 +24,14 @@ price of an unbounded dictionary.
 
 from __future__ import annotations
 
+import re
+
 import pandas as pd
 import pyspark.sql.functions as F
 import pyspark.sql.types as T
 from pyspark.sql import DataFrame
 
-from ..functions.matcher import build_matcher
+from ..functions.matcher import RegexMatcher, _trie_regex, name_trie
 
 MENTION_SCHEMA = T.StructType([
     T.StructField("url", T.StringType()),
@@ -85,7 +89,7 @@ def detect_mentions(
     bc = spark.sparkContext.broadcast(names)
 
     def gen(batches):
-        matcher = build_matcher(bc.value)  # once per task
+        matcher = RegexMatcher(bc.value)  # once per task
         for pdf in batches:
             url_o, pid_o, start_o, surf_o = [], [], [], []
             for url, pid, text in zip(pdf["url"], pdf["par_id"], pdf["text"]):
@@ -113,22 +117,11 @@ def _scan_all_longest(paragraphs: DataFrame, chunk_names: list[str]) -> DataFram
     """One bounded pass: every (start, longest end) span this CHUNK's
     dictionary can produce, at every position (no consumption yet — the
     greedy jump must happen after merging across chunks)."""
-    import re
-
-    from ..functions.matcher import _trie_regex
-
     spark = paragraphs.sparkSession
     bc = spark.sparkContext.broadcast(chunk_names)
 
     def gen(batches):
-        root: dict = {}
-        for name in bc.value:
-            if not name:
-                continue
-            node = root
-            for ch in name:
-                node = node.setdefault(ch, {})
-            node[""] = True
+        root = name_trie(bc.value)
         # lookahead wrapper: a zero-width match at EVERY position where some
         # chunk name starts; group(1) is the greedy (longest) match there
         look = re.compile("(?=(" + _trie_regex(root) + "))") if root else None

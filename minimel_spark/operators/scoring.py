@@ -76,33 +76,17 @@ def logistic_score(
 
 
 def score_pairs(model, features: DataFrame) -> DataFrame:
-    """Apply the matcher; adds ``score`` = P(match).
+    """Apply the matcher ``train_pair_matcher`` fits (assembler + binary LR);
+    adds ``score`` = P(match).
 
-    For the standard assembler + binary-LR pipeline this is
-    ``logistic_score`` over the model's coefficients (r6), which skips
-    materializing four ML vector columns (features, rawPrediction,
-    probability, prediction) per pair row. Any other model shape falls back
-    to ``model.transform``.
+    This is ``logistic_score`` over the model's coefficients (r6), which
+    skips materializing four ML vector columns (features, rawPrediction,
+    probability, prediction) per pair row.
     """
-    stages = getattr(model, "stages", None)
-    if stages and len(stages) == 2:
-        from pyspark.ml.classification import LogisticRegressionModel
-
-        assembler, lr = stages
-        if (
-            isinstance(lr, LogisticRegressionModel)
-            and lr.numClasses == 2
-            and hasattr(assembler, "getInputCols")
-        ):
-            return logistic_score(
-                features, lr.coefficients, lr.intercept, assembler.getInputCols()
-            )
-    from pyspark.ml.functions import vector_to_array
-
-    scored = model.transform(features)
-    return scored.withColumn(
-        "score", vector_to_array("probability").getItem(1)
-    ).drop("features", "rawPrediction", "probability", "prediction")
+    assembler, lr = model.stages
+    return logistic_score(
+        features, lr.coefficients, lr.intercept, assembler.getInputCols()
+    )
 
 
 def match_edges(scored: DataFrame, threshold: float = 0.5) -> DataFrame:

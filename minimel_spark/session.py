@@ -49,11 +49,8 @@ def get_spark(
         # in charge down to tiny stages — scale-general: the floor matters
         # exactly when a stage's input is small relative to the cluster,
         # which is when fan-out work gets serialized (guide §2.5 input-skew
-        # sibling; env-overridable for deployments).
-        .config(
-            "spark.sql.adaptive.coalescePartitions.minPartitionSize",
-            os.environ.get("MINIMEL_MIN_PARTITION_SIZE", "64k"),
-        )
+        # sibling; deployments override it through ``extra_conf``).
+        .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         # Arrow transfer for pandas UDFs / toPandas (north rule: vectorized only).
@@ -65,10 +62,7 @@ def get_spark(
         # Wide rows stay bounded by Spark 4's arrow.maxBytesPerBatch cap
         # (64 MiB default), so text-heavy UDF batches split by bytes, not
         # by this knob.
-        .config(
-            "spark.sql.execution.arrow.maxRecordsPerBatch",
-            os.environ.get("MINIMEL_ARROW_BATCH", "50000"),
-        )
+        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "50000")
         # Broadcast threshold: dimension tables (title index, candidate dict
         # exports) should broadcast; 64m is safe with 128 GiB driver/executors.
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))

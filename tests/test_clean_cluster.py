@@ -105,7 +105,6 @@ def test_connected_components_empty_edge_list(spark):
     # zero edges are within any budget, so both calls take the single task
     assert connected_components(df).count() == 0
     assert connected_components(df, max_broadcast_nodes=0).count() == 0
-    assert connected_components(df, pre_contract=False).count() == 0
     assert connected_components(df).schema.simpleString() == (
         "struct<node:bigint,component:bigint>"
     )
@@ -147,10 +146,10 @@ def test_min_label_components_kernel_vs_oracle(seed):
 
 @pytest.mark.parametrize("seed", [3, 4])
 def test_connected_components_pre_contract_equivalence(spark, seed):
-    """The pre-contraction fast path (VERDICT r4 #2) must be output-identical
-    to the plain iterative loop — including on graphs with dense cliques
-    (the case contraction accelerates) and isolated 2-node components (the
-    fully-collapsed expansion edge case)."""
+    """The pre-contracted distributed loop (VERDICT r4 #2) must equal the
+    oracle — including on graphs with dense cliques (the case contraction
+    accelerates) and isolated 2-node components (the fully-collapsed
+    expansion edge case)."""
     rng = random.Random(seed)
     nodes = [f"n{i:03d}" for i in range(50)]
     edges = [
@@ -161,12 +160,10 @@ def test_connected_components_pre_contract_equivalence(spark, seed):
     edges += [("z98", "z99")]
     edges = [(a, b) for a, b in edges if a != b]
     df = spark.createDataFrame(edges, "src string, dst string")
-    # a zero budget pins both runs to the distributed loop
-    fast = {r["node"]: r["component"] for r in connected_components(
-        df, pre_contract=True, max_broadcast_nodes=0).collect()}
-    slow = {r["node"]: r["component"] for r in connected_components(
-        df, pre_contract=False, max_broadcast_nodes=0).collect()}
-    assert fast == slow == _cc_oracle(edges)
+    # a zero budget pins the run to the distributed loop
+    loop = {r["node"]: r["component"] for r in connected_components(
+        df, max_broadcast_nodes=0).collect()}
+    assert loop == _cc_oracle(edges)
 
 
 def test_connected_components_chain(spark):

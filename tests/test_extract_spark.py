@@ -53,24 +53,39 @@ def test_extract_matches_pure_function(spark, fixture_world):
     assert got == expected
 
 
-def test_extract_joined_path_equals_broadcast(spark, fixture_world):
+def test_extract_joined_path_equals_broadcast(spark, fixture_world, monkeypatch):
     """The over-budget title-index path (distributed title join + per-page
     mini-dict) must be byte-identical to the broadcast-dict path — including
-    the pagename self-link enrichment and nested-link targets."""
-    from minimel_spark.operators.extract import extract_paragraphs_joined
-
+    the pagename self-link enrichment and nested-link targets — and must
+    never collect the index to the driver."""
     pages, index = fixture_world
     key = lambda r: (r["url"], r["par_id"])
     want = {key(r): (sorted(r["links"].items()), r["text"])
             for r in extract_paragraphs(pages, index).collect()}
     got = {key(r): (sorted(r["links"].items()), r["text"])
-           for r in extract_paragraphs_joined(pages, index).collect()}
+           for r in extract_paragraphs(pages, index, max_broadcast_titles=0).collect()}
     assert got == want
-    # the dispatch: a budget of 1 forces the joined path, same result
+    # a budget of 1 is also past the index size: same result
     via_dispatch = {key(r): (sorted(r["links"].items()), r["text"])
                     for r in extract_paragraphs(
                         pages, index, max_broadcast_titles=1).collect()}
     assert via_dispatch == want
+
+    # spy on collect (on the CONCRETE classic subclass — patching the
+    # pyspark.sql.DataFrame base never intercepts): the joined path must
+    # never pull the index; the only collect is the test's own result read
+    real_collect = type(pages).collect
+    sizes = []
+
+    def spy(self):
+        rows = real_collect(self)
+        sizes.append(len(rows))
+        return rows
+
+    monkeypatch.setattr(type(pages), "collect", spy)
+    spied = extract_paragraphs(pages, index, max_broadcast_titles=0).collect()
+    assert {key(r): (sorted(r["links"].items()), r["text"]) for r in spied} == want
+    assert sizes == [len(want)], sizes
 
 
 def test_anchor_counts_min_count_and_normalization(spark, fixture_world):

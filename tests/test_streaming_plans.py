@@ -106,14 +106,20 @@ def test_windowed_mention_volume_watermark(spark, pages_dir, tmp_path):
 
 
 def test_carry_cols_passthrough(spark):
+    """Carried columns survive both title paths: the broadcast dict and,
+    past the budget (``max_broadcast_titles=0``), the distributed title
+    join."""
     pages = synth_pages(spark, n_pages=10, seed=3)
     index = synth_title_index(spark)
-    pars = extract_paragraphs(pages, index, carry_cols=("warc_ts", "lang"))
-    assert {"url", "par_id", "links", "text", "warc_ts", "lang"} <= set(pars.columns)
-    joined = pars.select("url", "lang").distinct().join(
-        pages.select("url", F.col("lang").alias("lang2")), "url"
-    )
-    assert joined.where(F.col("lang") != F.col("lang2")).count() == 0
+    for budget in (None, 0):
+        pars = extract_paragraphs(
+            pages, index, carry_cols=("warc_ts", "lang"), max_broadcast_titles=budget
+        )
+        assert {"url", "par_id", "links", "text", "warc_ts", "lang"} <= set(pars.columns)
+        joined = pars.select("url", "lang").distinct().join(
+            pages.select("url", F.col("lang").alias("lang2")), "url"
+        )
+        assert joined.where(F.col("lang") != F.col("lang2")).count() == 0
 
 
 # ---------- plan assertions (performance regressions fail loudly) ----------
@@ -129,6 +135,18 @@ def test_anchor_counts_plan_single_udf_and_pruned_scan(spark, pages_dir):
     assert count_plan_nodes(counts, "ArrowEvalPython") == 1
     # column pruning must reach the parquet scan: url + text only
     assert_scan_columns(counts, {"url", "text"})
+
+
+def test_extract_plan_joins_only_past_title_budget(spark, pages_dir):
+    """Within the title budget extraction is scan -> one MapInPandas with no
+    join (the benchmark's path); past it, the title join appears."""
+    index = synth_title_index(spark)
+    pages = spark.read.parquet(pages_dir)
+    under = extract_paragraphs(pages, index, max_broadcast_titles=10**6)
+    assert count_plan_nodes(under, "Join") == 0
+    assert count_plan_nodes(under, "MapInPandas") == 1
+    over = extract_paragraphs(pages, index, max_broadcast_titles=0)
+    assert count_plan_nodes(over, "Join") >= 1
 
 
 def test_pair_features_broadcasts_name_features(spark):

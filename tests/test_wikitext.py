@@ -155,7 +155,7 @@ def test_disambig_from_pages_operator(spark):
 
 
 def test_disambig_joined_path_matches_broadcast(spark, monkeypatch):
-    """VERDICT r3 #3: past max_broadcast_titles the joined twin must produce
+    """VERDICT r3 #3: past max_broadcast_titles the joined path must produce
     the identical row MULTISET (duplicated list links stay duplicated) with
     NO driver-side collect of the title index."""
     from minimel_spark.operators.disambig import disambig_from_pages
@@ -213,7 +213,7 @@ def test_detect_mentions_ner_gated(spark):
 
 def test_disambig_duplicate_index_titles_resolve_min_qid_both_paths(spark):
     """A duplicated index title must resolve to its minimum qid on BOTH the
-    broadcast and the joined disambig paths (the joined twin previously fed
+    broadcast and the joined disambig paths (the joined path previously fed
     duplicate keys to map_from_entries, which raises)."""
     from minimel_spark.operators.disambig import disambig_from_pages
 
