@@ -843,52 +843,54 @@ def q_er_pipeline_clusters(spark, sf_dir):
     connectivity repair (salt-bucket representative chaining in
     surface_blocked_pairs): without it, measured recall collapses to ~0.20
     (r3 ran cap 120k to dodge exactly that). F1 is computed with O(n)
-    aggregations (never enumerating pairs)."""
+    aggregations (never enumerating pairs). The pipeline commits its stages
+    in a temporary workdir; the result rows are collected before it is
+    removed."""
+    import shutil
+    import tempfile
+
     from minimel_spark.pipeline import PipelineConfig, run_pipeline
 
     docs = _t(spark, sf_dir, "documents").where(F.col("doc_id") < 150)
     pages = pages_from_documents(docs)
     index = doc_title_index(docs)
-    gate_caches: list = []
-    out = run_pipeline(
-        spark,
-        pages,
-        index,
-        config=PipelineConfig(min_count=1, max_pairs_per_block=2000),
-        persisted_out=gate_caches,
-    )
-    pred = out["er_clusters"].withColumnRenamed("cluster_id", "p")
-    gold = out["mentions"].select(
-        F.xxhash64("url", "par_id", "start").alias("rec_id"),
-        F.xxhash64("surface").alias("g"),
-    )
-    both = pred.join(gold, "rec_id")
-    cell = both.groupBy("p", "g").agg(F.count(F.lit(1)).alias("n"))
+    workdir = tempfile.mkdtemp(prefix="minimel_er_pipeline_")
+    try:
+        out = run_pipeline(
+            spark,
+            pages,
+            index,
+            workdir,
+            config=PipelineConfig(min_count=1, max_pairs_per_block=2000),
+        )
+        pred = out["er_clusters"].withColumnRenamed("cluster_id", "p")
+        gold = out["mentions"].select(
+            F.xxhash64("url", "par_id", "start").alias("rec_id"),
+            F.xxhash64("surface").alias("g"),
+        )
+        both = pred.join(gold, "rec_id")
+        cell = both.groupBy("p", "g").agg(F.count(F.lit(1)).alias("n"))
 
-    def _pairs(c):
-        return F.sum(c * (c - F.lit(1)) / 2)
+        def _pairs(c):
+            return F.sum(c * (c - F.lit(1)) / 2)
 
-    tp = cell.agg(_pairs(F.col("n")).alias("tp"))
-    pp = (
-        cell.groupBy("p").agg(F.sum("n").alias("n")).agg(_pairs(F.col("n")).alias("pp"))
-    )
-    gp = (
-        cell.groupBy("g").agg(F.sum("n").alias("n")).agg(_pairs(F.col("n")).alias("gp"))
-    )
-    nrec = pred.agg(F.count(F.lit(1)).cast("long").alias("n_records"))
-    stats = nrec.crossJoin(tp).crossJoin(pp).crossJoin(gp)
-    prec = F.col("tp") / F.col("pp")
-    rec = F.col("tp") / F.col("gp")
-    f1 = 2 * prec * rec / (prec + rec)
-    result = stats.select("n_records", (f1 >= 0.99).alias("f1_ok"))
-    # materialize once, then drop the pipeline's stage-internal caches (this
-    # is a checkpoint-less run, so they arrive via persisted_out) — otherwise
-    # each gate invocation leaks them for the sweep's lifetime, and the
-    # driver's own toPandas would re-evaluate the whole plan anyway
-    rows = result.collect()
-    for cached in gate_caches:
-        cached.unpersist()
-    return spark.createDataFrame(rows, result.schema)
+        tp = cell.agg(_pairs(F.col("n")).alias("tp"))
+        pp = (
+            cell.groupBy("p").agg(F.sum("n").alias("n")).agg(_pairs(F.col("n")).alias("pp"))
+        )
+        gp = (
+            cell.groupBy("g").agg(F.sum("n").alias("n")).agg(_pairs(F.col("n")).alias("gp"))
+        )
+        nrec = pred.agg(F.count(F.lit(1)).cast("long").alias("n_records"))
+        stats = nrec.crossJoin(tp).crossJoin(pp).crossJoin(gp)
+        prec = F.col("tp") / F.col("pp")
+        rec = F.col("tp") / F.col("gp")
+        f1 = 2 * prec * rec / (prec + rec)
+        result = stats.select("n_records", (f1 >= 0.99).alias("f1_ok"))
+        rows = result.collect()
+        return spark.createDataFrame(rows, result.schema)
+    finally:
+        shutil.rmtree(workdir, ignore_errors=True)
 
 
 SQL_ER_PIPELINE = """
@@ -914,46 +916,51 @@ def q_er_matcher_planted(spark, sf_dir):
     per entity; a constant scorer fails the gate both ways (all-high merges
     entities through LSH-blocked cross pairs, all-low splits every record) —
     see tests/test_pipeline.py. Measured matcher margin on this corpus:
-    same-entity min score ~1-1e-8, cross-entity max ~1e-7."""
+    same-entity min score ~1-1e-8, cross-entity max ~1e-7. Like
+    er_pipeline_clusters, it runs in a temporary workdir removed after the
+    rows are collected."""
+    import shutil
+    import tempfile
+
     from minimel_spark.pipeline import PipelineConfig, run_pipeline
     from minimel_spark.sources.synth import variant_world
 
     pages, index, vdim = variant_world(spark, n_entities=40, copies=2)
-    gate_caches: list = []
-    out = run_pipeline(
-        spark,
-        pages,
-        index,
-        config=PipelineConfig(min_count=1, bands=12, num_hashes=12),
-        persisted_out=gate_caches,
-    )
-    j = (
-        out["records"].select("rec_id", "name")
-        .join(out["er_clusters"], "rec_id")
-        .join(vdim, "name")
-    )
-    per = j.groupBy("entity_id", "cluster_id").agg(F.count(F.lit(1)).alias("_n"))
-    csize = j.groupBy("cluster_id").agg(F.count(F.lit(1)).alias("_cs"))
-    tot = j.groupBy("entity_id").agg(F.count(F.lit(1)).alias("n_records"))
-    recovered = (
-        per.join(csize, "cluster_id")
-        .join(tot, "entity_id")
-        .withColumn(
-            "_ok", (F.col("_n") == F.col("_cs")) & (F.col("_n") == F.col("n_records"))
+    workdir = tempfile.mkdtemp(prefix="minimel_er_planted_")
+    try:
+        out = run_pipeline(
+            spark,
+            pages,
+            index,
+            workdir,
+            config=PipelineConfig(min_count=1, bands=12, num_hashes=12),
         )
-        .groupBy("entity_id")
-        .agg(F.max("_ok").alias("recovered"))
-    )
-    result = tot.join(recovered, "entity_id").select(
-        F.col("entity_id").cast("long").alias("entity_id"),
-        F.col("n_records").cast("long").alias("n_records"),
-        "recovered",
-    )
-    # single evaluation + cache cleanup, same pattern as er_pipeline_clusters
-    rows = result.collect()
-    for cached in gate_caches:
-        cached.unpersist()
-    return spark.createDataFrame(rows, result.schema)
+        j = (
+            out["records"].select("rec_id", "name")
+            .join(out["er_clusters"], "rec_id")
+            .join(vdim, "name")
+        )
+        per = j.groupBy("entity_id", "cluster_id").agg(F.count(F.lit(1)).alias("_n"))
+        csize = j.groupBy("cluster_id").agg(F.count(F.lit(1)).alias("_cs"))
+        tot = j.groupBy("entity_id").agg(F.count(F.lit(1)).alias("n_records"))
+        recovered = (
+            per.join(csize, "cluster_id")
+            .join(tot, "entity_id")
+            .withColumn(
+                "_ok", (F.col("_n") == F.col("_cs")) & (F.col("_n") == F.col("n_records"))
+            )
+            .groupBy("entity_id")
+            .agg(F.max("_ok").alias("recovered"))
+        )
+        result = tot.join(recovered, "entity_id").select(
+            F.col("entity_id").cast("long").alias("entity_id"),
+            F.col("n_records").cast("long").alias("n_records"),
+            "recovered",
+        )
+        rows = result.collect()
+        return spark.createDataFrame(rows, result.schema)
+    finally:
+        shutil.rmtree(workdir, ignore_errors=True)
 
 
 SQL_ER_MATCHER_PLANTED = """
@@ -6637,19 +6644,17 @@ def q_stream_incremental_minhash(spark, sf_dir):
     )
     try:
         assert q.awaitTermination(300), "streaming drain did not finish"
+        out = spark.read.parquet(pairs_dir).select(
+            F.least("id_new", "id_old").cast("long").alias("id_a"),
+            F.greatest("id_new", "id_old").cast("long").alias("id_b"),
+            F.round("jaccard", 6).alias("jaccard"),
+        )
+        # collected before pairs_dir goes with the other three directories
+        return spark.createDataFrame(out.collect(), out.schema)
     finally:
         q.stop()
-        shutil.rmtree(ckpt, ignore_errors=True)
-        shutil.rmtree(src, ignore_errors=True)
-        # state is never read after the drain; only pairs_dir stays (the
-        # returned plan reads it lazily)
-        shutil.rmtree(state, ignore_errors=True)
-    out = spark.read.parquet(pairs_dir)
-    return out.select(
-        F.least("id_new", "id_old").cast("long").alias("id_a"),
-        F.greatest("id_new", "id_old").cast("long").alias("id_b"),
-        F.round("jaccard", 6).alias("jaccard"),
-    )
+        for d in (ckpt, src, state, pairs_dir):
+            shutil.rmtree(d, ignore_errors=True)
 
 
 def q_corpus_lm_perplexity(spark, sf_dir):

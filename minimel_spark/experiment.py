@@ -43,12 +43,16 @@ def sweep(
     title_index: DataFrame,
     base_config: PipelineConfig,
     param_grid: list[dict],
-    workdir: str | None = None,
+    workdir: str,
     gold: DataFrame | None = None,
 ) -> DataFrame:
     """Run the pipeline once per combo; return one evaluation row per combo:
     (combo_id, params_json, n_records, n_clusters [, support, micro_f1,
     macro_f1 when gold given]).
+
+    Each combo commits its stages under ``<workdir>/<combo_id>`` (so an
+    interrupted sweep resumes), and the evaluation table is written to
+    ``<workdir>/evaluation``.
 
     gold: optional (doc_id, name, gold_qid) mention labels; predictions come
     from the count-argmax cascade over each combo's anchor statistics.
@@ -57,11 +61,8 @@ def sweep(
     for params in param_grid:
         cid = combo_id(params)
         cfg = replace(base_config, **params)
-        wd = os.path.join(workdir, cid) if workdir else None
-        combo_caches: list = []
         out = run_pipeline(
-            spark, pages, title_index, workdir=wd, config=cfg,
-            persisted_out=combo_caches,
+            spark, pages, title_index, workdir=os.path.join(workdir, cid), config=cfg
         )
         clusters = out["er_clusters"]
         row = {
@@ -87,14 +88,6 @@ def sweep(
                 macro_f1=float(ma["macro_f1"]),
             )
         rows.append(row)
-        # every metric for this combo is materialized into `row` by now, so
-        # the combo's stage-internal caches (handed out via persisted_out on
-        # checkpoint-less runs) can be dropped before the next combo's build
-        for cached in combo_caches:
-            cached.unpersist()
     df = spark.createDataFrame(rows)
-    if workdir:
-        df.coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(workdir, "evaluation")
-        )
+    df.coalesce(1).write.mode("overwrite").parquet(os.path.join(workdir, "evaluation"))
     return df

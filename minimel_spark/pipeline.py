@@ -120,39 +120,31 @@ def run_pipeline(
     spark: SparkSession,
     pages: DataFrame,
     title_index: DataFrame,
-    workdir: str | None = None,
+    workdir: str,
     config: PipelineConfig | None = None,
     disambig: DataFrame | None = None,
     badents: DataFrame | None = None,
-    persisted_out: list | None = None,
 ) -> dict:
     """Run (or resume) the full pipeline; returns the stage tables.
 
-    Stage-internal caches (the blocking name table, the distinct name-pair
-    table) are handed out OUT-OF-BAND via ``persisted_out`` (ADVICE r4: the
-    result dict holds only DataFrames), mirroring the operator-level
-    convention: on checkpoint-less runs pass a list to receive the live
-    caches and unpersist them after your terminal action. If no list is
-    passed on a checkpoint-less run the caches are unpersisted here eagerly —
-    correctness-neutral (lazy plans recompute), trading the multi-consumer
-    cache reuse for a leak-free default. Checkpointed runs drop them here
-    once every stage is parquet-committed, as before."""
+    Every stage is committed as parquet under ``workdir`` (required), and a
+    rerun on the same workdir resumes the committed stages; the returned
+    tables read the committed files (``pairs`` and ``scored_pairs`` are views
+    over committed ``pair_features``). The pair stage's internal caches (the
+    blocking name table, the blocked pair stream, the distinct name-pair
+    table and, over its byte budget, the ``cos_bow`` vector table) are
+    unpersisted as soon as ``pair_features`` is committed, because every
+    later stage reads parquet."""
     cfg = config or PipelineConfig()
     if cfg.cluster_method not in ("transitive", "pivot"):
         raise ValueError(
             f"cluster_method must be 'transitive' or 'pivot', got "
             f"{cfg.cluster_method!r}"
         )
-    ckpt = Checkpointer(spark, workdir or None)
-    if workdir:
-        # a workdir resumes only the config that committed it
-        ckpt.write_manifest(
-            {k: v for k, v in vars(cfg).items() if k != "cluster_method"}
-        )
-    # stage-internal caches (blocking name table, distinct name-pair table):
-    # unpersisted below once checkpoints materialize; on checkpoint-less
-    # (fully lazy) runs they are handed to ``persisted_out`` for the caller
-    # to drop after its terminal action (ADVICE r3/r4)
+    ckpt = Checkpointer(spark, workdir)
+    # a workdir resumes only the config that committed it
+    ckpt.write_manifest({k: v for k, v in vars(cfg).items() if k != "cluster_method"})
+    # the pair stage's internal caches, dropped once pair_features is committed
     persisted: list = []
 
     paragraphs = ckpt.stage(
@@ -246,6 +238,8 @@ def run_pipeline(
         )
 
     feats = ckpt.stage("pair_features", _pair_features)
+    for df in persisted:
+        df.unpersist()
 
     def _matcher():
         # The persisted matcher is one row: the LR coefficients in
@@ -254,7 +248,7 @@ def run_pipeline(
         # (e.g. clean() left no ambiguous anchor) there is nothing to train
         # on, as the LR refuses an empty training set: commit no row.
         n_rows, coefs, intercept = 0, [0.0] * len(FEATURE_COLS), 0.0
-        if ckpt.committed_rows("pair_features", feats) > 0:
+        if ckpt.committed_rows("pair_features") > 0:
             labeled = weak_pair_labels(feats, candidates)
             lr = train_pair_matcher(
                 labeled.where(F.col("is_match").isNotNull()),
@@ -297,19 +291,6 @@ def run_pipeline(
         else f"er_clusters_{cfg.cluster_method}"
     )
     er_clusters = ckpt.stage(er_stage, _er)
-
-    if workdir:
-        # every stage is parquet-committed by now, so the stage-internal
-        # caches have served their multi-consumer subplans — drop them
-        for df in persisted:
-            df.unpersist()
-    elif persisted_out is not None:
-        persisted_out.extend(persisted)
-    else:
-        # leak-free default: no receiver for the caches, so drop them now
-        # (the returned lazy plans recompute the subplans instead)
-        for df in persisted:
-            df.unpersist()
 
     return {
         "paragraphs": paragraphs,

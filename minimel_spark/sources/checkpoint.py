@@ -20,13 +20,16 @@ Per-stage metrics land in ``<base>/_metrics/`` as one parquet row per
 contributed what) plus stage wall time. They are read on the driver from the
 committed part files' parquet footers (``part-NNNNN`` -> ``num_rows``) and
 written with pyarrow, so they describe the exact committed write layout and
-cost no job.
+cost no job. The lineage file is renamed into place after the parquet commit,
+and a stage counts as committed only once it exists, so a crash between the
+two reruns the stage instead of resuming it without lineage.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import re
 import time
 import uuid
 from collections.abc import Callable
@@ -68,20 +71,28 @@ def _part_rows(path: str) -> dict[int, int]:
 
 
 class Checkpointer:
-    """Commits stages under ``base_dir``; with ``base_dir=None`` it is
-    disabled: every stage is built lazily and nothing touches the disk."""
+    """Commits stages under ``base_dir`` (created if absent). A stage counts
+    as committed once both its parquet ``_SUCCESS`` marker and its lineage
+    rows exist; a stage missing either is rebuilt."""
 
-    def __init__(self, spark: SparkSession, base_dir: str | None):
+    def __init__(self, spark: SparkSession, base_dir: str):
         self.spark = spark
         self.base = base_dir
-        if base_dir is not None:
-            os.makedirs(base_dir, exist_ok=True)
+        os.makedirs(base_dir, exist_ok=True)
 
     def _path(self, stage: str) -> str:
         return os.path.join(self.base, stage)
 
     def has(self, stage: str) -> bool:
-        return os.path.exists(os.path.join(self._path(stage), "_SUCCESS"))
+        """True once ``stage`` is committed: its parquet ``_SUCCESS`` marker
+        and its lineage file ``_metrics/part-<stage>-<uuid hex>.parquet``
+        both exist. A hidden temporary name, or the lineage of another stage
+        whose name starts with this one, does not count."""
+        if not os.path.exists(os.path.join(self._path(stage), "_SUCCESS")):
+            return False
+        d = os.path.join(self.base, "_metrics")
+        pat = re.compile(rf"part-{re.escape(stage)}-[0-9a-f]{{32}}\.parquet")
+        return os.path.isdir(d) and any(pat.fullmatch(n) for n in os.listdir(d))
 
     def stage(self, name: str, build: Callable[[], DataFrame]) -> DataFrame:
         """Return the committed table for ``name``; build+commit it if absent.
@@ -89,8 +100,6 @@ class Checkpointer:
         X3 skip-if-exists semantics: an already-committed stage is read back,
         never recomputed — the resume contract.
         """
-        if self.base is None:
-            return build()
         path = self._path(name)
         if self.has(name):
             return self.spark.read.parquet(path)
@@ -101,12 +110,10 @@ class Checkpointer:
         self._write_metrics(name, path, wall)
         return self.spark.read.schema(df.schema).parquet(path)
 
-    def committed_rows(self, stage: str, df: DataFrame) -> int:
-        """Row count of ``stage``: summed from its part-file footers once it
-        is committed (no job), else ``df.count()`` (checkpointing off)."""
-        if self.base is not None and self.has(stage):
-            return sum(_part_rows(self._path(stage)).values())
-        return df.count()
+    def committed_rows(self, stage: str) -> int:
+        """Row count of the committed ``stage``, summed from its part-file
+        footers (no job)."""
+        return sum(_part_rows(self._path(stage)).values())
 
     def _write_metrics(self, stage: str, path: str, wall_secs: float) -> None:
         """X4: one row per (stage, partition) with its committed row count,
@@ -133,8 +140,6 @@ class Checkpointer:
         os.replace(tmp, os.path.join(out_dir, name))
 
     def metrics(self) -> DataFrame | None:
-        if self.base is None:
-            return None
         p = os.path.join(self.base, "_metrics")
         if not os.path.exists(p):
             return None

@@ -2,6 +2,8 @@
 """Local stand-in for the driver's correctness gate: run every __spark_entry__
 query against its DuckDB oracle at a given sf dir and report row-count /
 schema-ish / value-hash matches (columns sorted by name, rows sorted).
+A query that leaves new entries in ``tempfile.gettempdir()`` gets one
+``LEAK <query>: <names>`` line; leaks are reported, not counted as failures.
 
 Usage: python scripts/check_entry.py [sf_dir] [query ...]
 """
@@ -11,6 +13,7 @@ from __future__ import annotations
 import hashlib
 import os
 import sys
+import tempfile
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -72,15 +75,22 @@ def main():
     qs = entrymod.queries()
     oracles = entrymod.oracle_sql()
     failures = []
+    tmp = tempfile.gettempdir()
     for name, fn in qs.items():
         if only and name not in only:
             continue
+        before = set(os.listdir(tmp))
         t0 = time.time()
         try:
             sdf = fn(spark, sf_dir).toPandas()
         except Exception as e:
             print(f"FAIL  {name}: spark error: {e}")
             failures.append(name)
+            sdf = None
+        leaked = sorted(set(os.listdir(tmp)) - before)
+        if leaked:
+            print(f"LEAK  {name}: {', '.join(leaked)}")
+        if sdf is None:
             continue
         t_spark = time.time() - t0
         if name not in oracles:

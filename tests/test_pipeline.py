@@ -128,7 +128,7 @@ def test_checkpoint_resume_reads_every_stage_without_recompute(spark, pipeline_r
         got = ckpt.stage(stage, recompute)
         assert got.schema == tables[stage].schema, stage
         assert got.count() == tables[stage].count(), stage
-        assert ckpt.committed_rows(stage, got) == tables[stage].count(), stage
+        assert ckpt.committed_rows(stage) == tables[stage].count(), stage
     # a resumed stage adds no lineage rows
     assert ckpt.metrics().count() == n_lineage
 
@@ -198,11 +198,33 @@ def test_pipeline_tiny_budgets_identical_clusters(
     """A run where every size gate takes its over-budget path (the joined
     title index, the chunked anchor automaton, the unhinted name-pair join)
     and Spark may broadcast no join commits exactly the stages of the
-    default run."""
+    default run. The pair stage's internal caches are released before the
+    matcher stage starts, since every later stage reads committed parquet."""
+    from pyspark import StorageLevel
+
     from minimel_spark import pipeline
 
     out, workdir, pages, index, cfg = pipeline_result
     monkeypatch.setattr(pipeline, "MAX_BROADCAST_ROWS", 1)
+    # the persisted_out lists the pair operators receive, and the storage
+    # level of every cache in them when the matcher stage starts
+    received, levels = [], []
+
+    def receiving(fn):
+        def spy(*args, persisted_out, **kwargs):
+            received.append(persisted_out)
+            return fn(*args, persisted_out=persisted_out, **kwargs)
+
+        return spy
+
+    def labels(*args, **kwargs):
+        levels.extend(df.storageLevel for caches in received for df in caches)
+        return weak_pair_labels(*args, **kwargs)
+
+    weak_pair_labels = pipeline.weak_pair_labels
+    for name in ("surface_blocked_pairs", "pair_features"):
+        monkeypatch.setattr(pipeline, name, receiving(getattr(pipeline, name)))
+    monkeypatch.setattr(pipeline, "weak_pair_labels", labels)
     key = "spark.sql.autoBroadcastJoinThreshold"
     threshold = spark.conf.get(key)
     spark.conf.set(key, "-1")
@@ -217,6 +239,8 @@ def test_pipeline_tiny_budgets_identical_clusters(
                 assert _sorted_rows(got[stage]) == _sorted_rows(want[stage]), stage
     finally:
         spark.conf.set(key, threshold)
+    assert len(received) == 2 and levels
+    assert all(level == StorageLevel.NONE for level in levels), levels
 
 
 def test_pipeline_resume_ignores_size_budget(spark, pipeline_result, tmp_path, monkeypatch):
@@ -235,22 +259,56 @@ def test_pipeline_resume_ignores_size_budget(spark, pipeline_result, tmp_path, m
     assert _sorted_rows(out2["er_clusters"]) == _sorted_rows(out["er_clusters"])
 
 
-def test_disabled_checkpointer_touches_no_directory(spark, monkeypatch):
-    """Without a base directory the checkpointer is off: ``stage`` returns
-    ``build()`` as is, and no path is created or read."""
-    import os
+def test_checkpointer_stage_needs_its_own_lineage_file(spark, tmp_path):
+    """A stage counts as committed only with ``_SUCCESS`` and its own
+    lineage file: a hidden temporary lineage name and the lineage of a
+    stage whose name extends this one do not count."""
+    import uuid
 
     from minimel_spark.sources.checkpoint import Checkpointer
 
-    def no_dirs(*args, **kwargs):
-        raise AssertionError("a disabled checkpointer created a directory")
+    ckpt = Checkpointer(spark, str(tmp_path))
+    (tmp_path / "er_clusters").mkdir()
+    (tmp_path / "er_clusters" / "_SUCCESS").touch()
+    metrics = tmp_path / "_metrics"
+    metrics.mkdir()
+    name = f"part-er_clusters-{uuid.uuid4().hex}.parquet"
+    (metrics / f".{name}.tmp").touch()
+    (metrics / f"part-er_clusters_pivot-{uuid.uuid4().hex}.parquet").touch()
+    assert not ckpt.has("er_clusters")
+    (metrics / name).touch()
+    assert ckpt.has("er_clusters")
+    assert not ckpt.has("er_clusters_pivot")
 
-    monkeypatch.setattr(os, "makedirs", no_dirs)
-    ckpt = Checkpointer(spark, None)
-    built = spark.range(3)
-    assert ckpt.stage("paragraphs", lambda: built) is built
-    assert ckpt.committed_rows("paragraphs", built) == 3
-    assert ckpt.metrics() is None
+
+def test_pipeline_rebuilds_stage_without_lineage(spark, pipeline_result, tmp_path):
+    """A stage whose parquet commit has no lineage rows (a crash between
+    the write and the lineage write) is rebuilt on resume: the same rows,
+    its lineage is back and sums to the committed rows, and no other stage
+    gains a lineage row."""
+    import glob
+    import os
+    import shutil
+    from collections import Counter
+
+    from minimel_spark.sources.checkpoint import Checkpointer
+
+    out, workdir, pages, index, cfg = pipeline_result
+    copy = str(tmp_path / "ckl")
+    shutil.copytree(workdir, copy)
+    (lineage,) = glob.glob(os.path.join(copy, "_metrics", "part-er_clusters-*.parquet"))
+    os.remove(lineage)
+    before = Counter(r["stage"] for r in Checkpointer(spark, copy).metrics().collect())
+    assert "er_clusters" not in before
+    out2 = run_pipeline(spark, pages.where(F.lit(False)), index, workdir=copy, config=cfg)
+    assert _sorted_rows(out2["er_clusters"]) == _sorted_rows(out["er_clusters"])
+    rows = out2["metrics"].collect()
+    after = Counter(r["stage"] for r in rows)
+    assert after.pop("er_clusters") >= 1
+    assert after == before
+    assert sum(r["rows"] for r in rows if r["stage"] == "er_clusters") == (
+        out2["er_clusters"].count()
+    )
 
 
 def test_pipeline_pivot_cluster_method(spark, pipeline_result, tmp_path):
@@ -282,7 +340,11 @@ def test_pipeline_pivot_cluster_method(spark, pipeline_result, tmp_path):
     # pivots label their own cluster, so every cluster id is a member of it
     assert all(memb.get(cl) == cl for cl in set(memb.values()))
     with pytest.raises(ValueError, match="cluster_method"):
-        run_pipeline(spark, pages, index, config=PipelineConfig(cluster_method="bogus"))
+        run_pipeline(
+            spark, pages, index, workdir=str(tmp_path / "ckx"),
+            config=PipelineConfig(cluster_method="bogus"),
+        )
+    assert not (tmp_path / "ckx").exists()
 
 
 def test_pipeline_no_ambiguous_anchor_commits_empty_tail(spark, pipeline_result, tmp_path):

@@ -16,6 +16,8 @@ from minimel_spark.streaming import (
 )
 from minimel_spark.streaming.ingest import run_to_sink
 
+from conftest import SF_DIR
+
 
 @pytest.fixture(scope="module")
 def pages_dir(spark, tmp_path_factory):
@@ -384,6 +386,19 @@ def test_stream_incremental_minhash_batch_split_invariant(spark, tmp_path):
     assert len(rows) == len(want)
     # state grew per batch: 3 appends to docs and index each
     assert spark.read.parquet(str(tmp_path / "state") + "/docs").count() == 6
+
+
+@pytest.mark.skipif(not os.path.isdir(SF_DIR), reason="testdata absent")
+def test_stream_incremental_minhash_gate_leaves_no_temp_dir(spark, tmp_path, monkeypatch):
+    """The stream_incremental_minhash gate returns collected rows and removes
+    every directory it made: its source, state, pairs and checkpoint."""
+    import tempfile
+
+    import __spark_entry__ as entry
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    assert entry.q_stream_incremental_minhash(spark, SF_DIR).count() > 0
+    assert os.listdir(tmp_path) == []
 
 
 def test_stream_cms_sketch_equals_batch_and_state_bounded(spark, tmp_path):
