@@ -4325,20 +4325,19 @@ def q_stream_asof_join(spark, sf_dir):
     q = stream_asof_enrich(stream, snaps, ["user_id"], ["value"], out_dir, ckpt)
     try:
         assert q.awaitTermination(300), "streaming drain did not finish"
+        out = spark.read.parquet(f"{out_dir}/batch=0", f"{out_dir}/batch=1").select(
+            "event_id",
+            "user_id",
+            "ts",
+            "asof_ts",
+            F.round("asof_value", 6).alias("asof_value"),
+        )
+        # collected before out_dir goes with the other two directories
+        return spark.createDataFrame(out.collect(), out.schema)
     finally:
         q.stop()
-        shutil.rmtree(ckpt, ignore_errors=True)
-        shutil.rmtree(src, ignore_errors=True)
-        # out_dir stays: the returned plan reads it lazily (repo convention,
-        # see q_stream_incremental_minhash)
-    out = spark.read.parquet(f"{out_dir}/batch=0", f"{out_dir}/batch=1")
-    return out.select(
-        "event_id",
-        "user_id",
-        "ts",
-        "asof_ts",
-        F.round("asof_value", 6).alias("asof_value"),
-    )
+        for d in (ckpt, src, out_dir):
+            shutil.rmtree(d, ignore_errors=True)
 
 
 def q_rel_range_join(spark, sf_dir):
@@ -4575,6 +4574,7 @@ def q_rel_bucketed_join(spark, sf_dir):
     bucketed key join, the only strategy when BOTH sides are huge) is
     itself part of the driver-checked gate; the value hash then pins the
     join's correctness against a plain SQL oracle."""
+    import shutil
     import tempfile
 
     from minimel_spark.sources.bucketed import (
@@ -4585,23 +4585,29 @@ def q_rel_bucketed_join(spark, sf_dir):
     o = _t(spark, sf_dir, "orders").withColumnRenamed("o_custkey", "custkey")
     c = _t(spark, sf_dir, "customer").withColumnRenamed("c_custkey", "custkey")
     base = tempfile.mkdtemp(prefix="minimel_bkt_")
-    write_bucketed(
-        o, "bkt_orders_gate", ["custkey"], 8,
-        path=f"{base}/orders", sort_cols=["custkey"],
-    )
-    write_bucketed(
-        c, "bkt_customer_gate", ["custkey"], 8,
-        path=f"{base}/customer", sort_cols=["custkey"],
-    )
-    joined = assert_colocated_join(
-        spark, "bkt_orders_gate", "bkt_customer_gate", ["custkey"]
-    )
-    return joined.groupBy("c_mktsegment").agg(
-        F.count(F.lit(1)).cast("long").alias("n_orders"),
-        F.sum(F.col("o_totalprice").cast("decimal(18,4)"))
-        .cast("double")
-        .alias("totalprice"),
-    ).select("c_mktsegment", "n_orders", F.round("totalprice", 6).alias("totalprice"))
+    tables = ("bkt_orders_gate", "bkt_customer_gate")
+    try:
+        write_bucketed(
+            o, tables[0], ["custkey"], 8,
+            path=f"{base}/orders", sort_cols=["custkey"],
+        )
+        write_bucketed(
+            c, tables[1], ["custkey"], 8,
+            path=f"{base}/customer", sort_cols=["custkey"],
+        )
+        joined = assert_colocated_join(spark, *tables, ["custkey"])
+        out = joined.groupBy("c_mktsegment").agg(
+            F.count(F.lit(1)).cast("long").alias("n_orders"),
+            F.sum(F.col("o_totalprice").cast("decimal(18,4)"))
+            .cast("double")
+            .alias("totalprice"),
+        ).select("c_mktsegment", "n_orders", F.round("totalprice", 6).alias("totalprice"))
+        # collected before the tables and their directory go
+        return spark.createDataFrame(out.collect(), out.schema)
+    finally:
+        for t in tables:
+            spark.sql(f"DROP TABLE IF EXISTS {t}")
+        shutil.rmtree(base, ignore_errors=True)
 
 
 SQL_REL_BUCKETED_JOIN = """
@@ -5543,16 +5549,18 @@ def q_stream_dedup_events(spark, sf_dir):
     )
     try:
         assert q.awaitTermination(300), "streaming drain did not finish"
+        out = spark.read.parquet(out_dir).select(
+            F.col("event_id").cast("long").alias("event_id"),
+            "event_type",
+            F.col("user_id").cast("long").alias("user_id"),
+            F.round("value", 6).alias("value"),
+        )
+        # collected before out_dir goes with the checkpoint directory
+        return spark.createDataFrame(out.collect(), out.schema)
     finally:
         q.stop()
-        shutil.rmtree(ckpt, ignore_errors=True)
-    out = spark.read.parquet(out_dir)
-    return out.select(
-        F.col("event_id").cast("long").alias("event_id"),
-        "event_type",
-        F.col("user_id").cast("long").alias("user_id"),
-        F.round("value", 6).alias("value"),
-    )
+        for d in (ckpt, out_dir):
+            shutil.rmtree(d, ignore_errors=True)
 
 
 SQL_STREAM_DEDUP = """

@@ -9,6 +9,7 @@ Usage (cluster):
 Usage (sandbox):
     python -m minimel_spark pipeline --pages /tmp/pages.parquet \\
         --index /tmp/index.parquet --workdir /tmp/run1
+    python -m minimel_spark report --workdir /tmp/run1   # no Spark session
 
 Subcommands mirror the reference CLI surface (minimel/__main__.py:24-75 maps
 subcommands to the experiment DAG); here each subcommand is one Spark job and
@@ -203,6 +204,19 @@ def cmd_disambig(args) -> int:
     return 0
 
 
+def cmd_report(args) -> int:
+    """One line per committed stage of ``--workdir``, read from its lineage
+    and part-file footers without a Spark session."""
+    from .sources.checkpoint import stage_report
+
+    for r in stage_report(args.workdir):
+        print(
+            f"{r['stage']}: rows={r['rows']} parts={r['parts']} "
+            f"bytes={r['bytes']} codec={r['codec']} wall_secs={r['wall_secs']:.3f}"
+        )
+    return 0
+
+
 def main(argv=None) -> int:
     p = argparse.ArgumentParser(prog="minimel_spark")
     p.add_argument("--master", default=None, help="override spark master")
@@ -224,6 +238,10 @@ def main(argv=None) -> int:
         help="entity formation: transitive closure or pivot (KwikCluster) stars",
     )
     pp.set_defaults(fn=cmd_pipeline)
+
+    prp = sub.add_parser("report", help="committed stages of a workdir (no Spark)")
+    prp.add_argument("--workdir", required=True)
+    prp.set_defaults(fn=cmd_report)
 
     pc = sub.add_parser("count", help="extraction + anchor statistics only")
     pc.add_argument("--pages", required=True)

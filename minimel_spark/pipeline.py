@@ -4,10 +4,14 @@ matcher -> transitive clustering -> predictions, with checkpoint/resume and
 metrics at every committed stage.
 
 The committed stages are paragraphs, anchor_counts, candidates,
-name_clusters, mentions, records, pair_features, matcher and er_clusters. The
-pair stream is committed once, as pair_features: ``pairs`` is its 5-column
-projection and ``scored_pairs`` adds the logistic score of the committed
-matcher row (four coefficients and the intercept), so neither is stored.
+name_clusters, mentions, pair_features, matcher and er_clusters. ``records``
+is a view: one row per committed mention, its ``rec_id`` hashed from the
+mention's key and its text joined from committed paragraphs, so each
+paragraph's text is stored once. The pair stream is committed once, as
+pair_features, sorted by name pair within each part file: ``pairs`` is its
+5-column projection and ``scored_pairs`` adds the logistic score of the
+committed matcher row (four coefficients and the intercept), so neither is
+stored.
 
 Mirrors the reference experiment DAG (minimel/experiment.py:72-318, §3 E2) but
 every stage is a distributed DataFrame job — the reference's driver-local
@@ -127,10 +131,13 @@ def run_pipeline(
 ) -> dict:
     """Run (or resume) the full pipeline; returns the stage tables.
 
-    Every stage is committed as parquet under ``workdir`` (required), and a
-    rerun on the same workdir resumes the committed stages; the returned
-    tables read the committed files (``pairs`` and ``scored_pairs`` are views
-    over committed ``pair_features``). The pair stage's internal caches (the
+    Every stage (paragraphs, anchor_counts, candidates, name_clusters,
+    mentions, pair_features, matcher and er_clusters) is committed as
+    parquet under ``workdir`` (required), and a rerun on the same workdir
+    resumes the committed stages; the returned tables read the committed
+    files. ``records`` is a view over committed ``mentions`` joined to
+    committed ``paragraphs``, and ``pairs`` and ``scored_pairs`` are views
+    over committed ``pair_features``. The pair stage's internal caches (the
     blocking name table, the blocked pair stream, the distinct name-pair
     table and, over its byte budget, the ``cos_bow`` vector table) are
     unpersisted as soon as ``pair_features`` is committed, because every
@@ -189,22 +196,22 @@ def run_pipeline(
         ),
     )
 
-    def _records():
-        # ER records: one per detected mention surface; context = paragraph
-        # text. rec_id is an 8-byte deterministic surrogate of the natural key
-        # (url, par_id, start): pair-generation shuffle volume is dominated by
-        # key bytes, and xxhash64 is partition-invariant. Lineage columns stay
-        # joinable via the same hash.
-        return (
-            mentions.join(paragraphs.select("url", "par_id", "text"), ["url", "par_id"])
-            .select(
-                F.xxhash64("url", "par_id", "start").alias("rec_id"),
-                F.col("surface").alias("name"),
-                "text",
-            )
-        )
-
-    records = ckpt.stage("records", _records)
+    # ER records: one per detected mention surface. rec_id is an 8-byte
+    # deterministic surrogate of the natural key (url, par_id, start):
+    # pair-generation shuffle volume is dominated by key bytes, and xxhash64
+    # is partition-invariant. Lineage columns stay joinable via the same hash.
+    # Records are not committed: blocking and the er_clusters join read the
+    # join-free projection of committed mentions, and the context text (the
+    # returned table and cos_bow's vector table) is joined from committed
+    # paragraphs, so each paragraph's text is stored once.
+    rec_cols = [
+        F.xxhash64("url", "par_id", "start").alias("rec_id"),
+        F.col("surface").alias("name"),
+    ]
+    rec_names = mentions.select(*rec_cols)
+    records = mentions.join(
+        paragraphs.select("url", "par_id", "text"), ["url", "par_id"]
+    ).select(*rec_cols, "text")
 
     def _pair_features():
         # Block keys (anchor dictionary ∪ LSH bands) are functions of the
@@ -214,7 +221,7 @@ def run_pipeline(
         # The pair stream is committed once, with its features: a crash
         # inside this stage redoes blocking too.
         pairs = surface_blocked_pairs(
-            records,
+            rec_names,
             key_col="name",
             num_hashes=cfg.num_hashes,
             bands=cfg.bands,
@@ -229,13 +236,17 @@ def run_pipeline(
         # AQE's post-shuffle partitions per task, so at web scale a partition
         # stays within twice the size AQE chose (a one-per-core target would
         # instead grow with the pair volume).
+        # Sorting each part file by name pair adds no exchange and no job;
+        # it makes the name-level columns (names and their three string
+        # similarities) parquet runs, and the row order inside a part file a
+        # function of its rows, which the matcher's LBFGS sums follow.
         return pair_features(
             pairs.coalesce(int(spark.conf.get("spark.sql.shuffle.partitions"))),
             records,
             name_col="name",
             max_broadcast_name_pairs=MAX_BROADCAST_ROWS,
             persisted_out=persisted,
-        )
+        ).sortWithinPartitions("name_a", "name_b", "rec_id_a", "rec_id_b")
 
     feats = ckpt.stage("pair_features", _pair_features)
     for df in persisted:
@@ -273,14 +284,14 @@ def run_pipeline(
         edges = match_edges(scored, cfg.match_threshold)
         if cfg.cluster_method == "pivot":
             pc = pivot_clusters(
-                edges, nodes=records.select(F.col("rec_id").alias("node"))
+                edges, nodes=rec_names.select(F.col("rec_id").alias("node"))
             )
             return pc.select(
                 F.col("node").alias("rec_id"), F.col("cluster").alias("cluster_id")
             )
         cc = connected_components(edges)
         return (
-            records.select("rec_id")
+            rec_names.select("rec_id")
             .join(cc.withColumnRenamed("node", "rec_id"), "rec_id", "left")
             .select("rec_id", F.coalesce("component", "rec_id").alias("cluster_id"))
         )

@@ -10,10 +10,16 @@ same API targets Iceberg tables — ``writeTo(...).createOrReplace()`` — with
 snapshot ids in place of _SUCCESS files; parquet keeps the sandbox dependency-
 free.)
 
-Committing a stage adds no Spark job to the parquet write itself. The table
-is read back with the schema just written (Spark's file source makes every field nullable on
-write and on read, so this is exactly the schema inference would find, without
-its job), and the lineage comes from the committed files themselves.
+Stages are written with zstd, a fixed choice (the default parquet codec of
+the Iceberg target); stages committed earlier with another codec resume as
+they are, since every parquet reader takes the codec from the footer.
+
+Committing a stage adds no Spark job to the parquet write itself, and reading
+a committed stage back, after its commit or on resume, starts none either:
+Spark stores the row schema in every part file's footer, and reading it from
+one footer gives the schema inference would find, without inference's job.
+An empty stage still commits one part file carrying the schema. The lineage
+comes from the committed files themselves.
 
 Per-stage metrics land in ``<base>/_metrics/`` as one parquet row per
 (stage, partition_id): rows per partition (the lineage of which partition
@@ -39,6 +45,7 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 _METRICS_SCHEMA = pa.schema(
     [
@@ -57,23 +64,43 @@ _METRICS_DDL = (
 )
 
 
+# footer key under which Spark stores the row schema of each part file
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def _part_files(path: str) -> list[str]:
+    """The visible ``part-*.parquet`` files of a directory, sorted by name."""
+    return sorted(
+        os.path.join(path, n)
+        for n in os.listdir(path)
+        if n.startswith("part-") and n.endswith(".parquet")
+    )
+
+
 def _part_rows(path: str) -> dict[int, int]:
     """Rows per write partition of a committed parquet directory, from the
     part files' footers: ``part-NNNNN-...parquet`` -> NNNNN (a partition that
     Spark split over several files sums them)."""
     rows: dict[int, int] = {}
-    for name in os.listdir(path):
-        if name.startswith("part-") and name.endswith(".parquet"):
-            pid = int(name.split("-")[1])
-            n = pq.read_metadata(os.path.join(path, name)).num_rows
-            rows[pid] = rows.get(pid, 0) + n
+    for f in _part_files(path):
+        pid = int(os.path.basename(f).split("-")[1])
+        rows[pid] = rows.get(pid, 0) + pq.read_metadata(f).num_rows
     return rows
 
 
+def _spark_schema(path: str) -> StructType:
+    """The Spark schema of a committed stage, from its first part file's
+    footer (no job)."""
+    meta = pq.read_schema(_part_files(path)[0]).metadata
+    return StructType.fromJson(json.loads(meta[_SPARK_SCHEMA_KEY]))
+
+
 class Checkpointer:
-    """Commits stages under ``base_dir`` (created if absent). A stage counts
-    as committed once both its parquet ``_SUCCESS`` marker and its lineage
-    rows exist; a stage missing either is rebuilt."""
+    """Commits stages under ``base_dir`` (created if absent) as
+    zstd-compressed parquet. A stage counts as committed once both its
+    parquet ``_SUCCESS`` marker and its lineage rows exist; a stage missing
+    either is rebuilt. A committed stage is read back with the schema in its
+    part-file footer, so resuming it starts no Spark job."""
 
     def __init__(self, spark: SparkSession, base_dir: str):
         self.spark = spark
@@ -101,14 +128,11 @@ class Checkpointer:
         never recomputed — the resume contract.
         """
         path = self._path(name)
-        if self.has(name):
-            return self.spark.read.parquet(path)
-        t0 = time.time()
-        df = build()
-        df.write.mode("overwrite").parquet(path)
-        wall = time.time() - t0
-        self._write_metrics(name, path, wall)
-        return self.spark.read.schema(df.schema).parquet(path)
+        if not self.has(name):
+            t0 = time.time()
+            build().write.mode("overwrite").option("compression", "zstd").parquet(path)
+            self._write_metrics(name, path, time.time() - t0)
+        return self.spark.read.schema(_spark_schema(path)).parquet(path)
 
     def committed_rows(self, stage: str) -> int:
         """Row count of the committed ``stage``, summed from its part-file
@@ -140,10 +164,14 @@ class Checkpointer:
         os.replace(tmp, os.path.join(out_dir, name))
 
     def metrics(self) -> DataFrame | None:
+        """The lineage rows of every committed stage, or None before the
+        first commit. Spark hides ``_``-prefixed directories, so the visible
+        lineage files are passed by name."""
         p = os.path.join(self.base, "_metrics")
-        if not os.path.exists(p):
+        files = _part_files(p) if os.path.isdir(p) else []
+        if not files:
             return None
-        return self.spark.read.schema(_METRICS_DDL).parquet(p)
+        return self.spark.read.schema(_METRICS_DDL).parquet(*files)
 
     def write_manifest(self, params: dict) -> None:
         """X2 analogue: machine-readable run parameters instead of the
@@ -172,6 +200,41 @@ class Checkpointer:
                 f"{self.base} was committed with other parameters; differing "
                 f"fields: {', '.join(diff)}. Use a fresh workdir."
             )
+
+
+def stage_report(base_dir: str) -> list[dict]:
+    """One entry per committed stage of a workdir, in commit order: its
+    lineage rows, part files, part-file bytes, column codecs and wall time.
+    Read with pyarrow from ``_metrics`` and the part-file footers alone, so
+    it needs no Spark session. A stage is listed once its lineage and its
+    ``_SUCCESS`` marker exist."""
+    lineage: dict[str, dict] = {}
+    d = os.path.join(base_dir, "_metrics")
+    for f in _part_files(d) if os.path.isdir(d) else []:
+        for r in pq.read_table(f).to_pylist():
+            lin = lineage.setdefault(r["stage"], dict(r, rows=0))
+            lin["rows"] += r["rows"]
+    out = []
+    for stage, lin in sorted(lineage.items(), key=lambda kv: kv[1]["committed_at"]):
+        path = os.path.join(base_dir, stage)
+        if not os.path.exists(os.path.join(path, "_SUCCESS")):
+            continue
+        parts = _part_files(path)
+        codecs = set()
+        for f in parts:
+            meta = pq.read_metadata(f)
+            for g in range(meta.num_row_groups):
+                rg = meta.row_group(g)
+                codecs.update(rg.column(c).compression for c in range(rg.num_columns))
+        out.append({
+            "stage": stage,
+            "rows": lin["rows"],
+            "parts": len(parts),
+            "bytes": sum(os.path.getsize(f) for f in parts),
+            "codec": ",".join(sorted(codecs)) or "-",
+            "wall_secs": lin["wall_secs"],
+        })
+    return out
 
 
 def logical_lineage(

@@ -132,3 +132,46 @@ def test_make_pyfiles_archive_deterministic_and_importable(tmp_path):
     )
     assert out.returncode == 0, out.stderr
     assert out.stdout.strip() == "0.9611"
+
+
+def test_cli_report_reads_lineage_and_footers_without_spark(spark, tmp_path):
+    """``report`` prints one line per committed stage, in commit order, from
+    the lineage rows and part-file footers; the process that runs it starts
+    no Spark session."""
+    import os
+    import subprocess
+    import sys
+
+    from minimel_spark.sources.checkpoint import Checkpointer
+
+    workdir = str(tmp_path / "ck")
+    ckpt = Checkpointer(spark, workdir)
+    ckpt.stage("ten", lambda: spark.range(10).repartition(2))
+    ckpt.stage("empty", lambda: spark.range(0))
+    # a stage whose commit has no lineage file is not committed
+    os.makedirs(os.path.join(workdir, "orphan"))
+    open(os.path.join(workdir, "orphan", "_SUCCESS"), "w").close()
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    code = (
+        "import sys; from minimel_spark.__main__ import main; "
+        "main(['report', '--workdir', sys.argv[1]]); "
+        "from pyspark import SparkContext; "
+        "assert SparkContext._active_spark_context is None"
+    )
+    res = subprocess.run(
+        [sys.executable, "-c", code, workdir], cwd=root, capture_output=True, text=True,
+    )
+    assert res.returncode == 0, res.stderr
+    lines = res.stdout.splitlines()
+    assert [line.split(":")[0] for line in lines] == ["ten", "empty"]
+    fields = [dict(kv.split("=") for kv in line.split(": ")[1].split()) for line in lines]
+    parts = sorted(f for f in os.listdir(os.path.join(workdir, "ten")) if f.startswith("part-"))
+    assert fields[0]["rows"] == "10" and fields[0]["parts"] == str(len(parts)) == "2"
+    assert fields[0]["bytes"] == str(
+        sum(os.path.getsize(os.path.join(workdir, "ten", f)) for f in parts)
+    )
+    assert fields[0]["codec"] == "ZSTD"
+    assert float(fields[0]["wall_secs"]) > 0
+    # an empty stage commits one part file with no row group, so no codec
+    assert fields[1]["rows"] == "0" and fields[1]["parts"] == "1"
+    assert fields[1]["codec"] == "-"

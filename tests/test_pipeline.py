@@ -33,10 +33,11 @@ def pipeline_result(spark, tmp_path_factory):
 
 
 # the stages a checkpointed run commits, and the tables run_pipeline returns
-# (``pairs`` and ``scored_pairs`` are views over committed ``pair_features``)
+# (``records`` is a view over committed ``mentions`` and ``paragraphs``,
+# ``pairs`` and ``scored_pairs`` are views over committed ``pair_features``)
 COMMITTED = [
     "paragraphs", "anchor_counts", "candidates", "name_clusters",
-    "mentions", "records", "pair_features", "matcher", "er_clusters",
+    "mentions", "pair_features", "matcher", "er_clusters",
 ]
 TABLES = [
     "paragraphs", "anchor_counts", "candidates", "name_clusters",
@@ -88,6 +89,70 @@ def test_pipeline_pair_views_over_committed_features(spark, pipeline_result):
     assert np.abs(s["score"].to_numpy() - want).max() <= 1e-12
 
 
+def test_pipeline_records_view_over_committed_mentions(spark, pipeline_result):
+    """``records`` is not committed: it holds one row per committed mention,
+    ``rec_id`` = xxhash64(url, par_id, start), ``name`` = the surface and
+    ``text`` = the committed paragraph's text, which is stored once."""
+    import os
+
+    out, workdir, *_ = pipeline_result
+    assert "records" not in os.listdir(workdir)
+    ments = (
+        spark.read.parquet(os.path.join(workdir, "mentions"))
+        .select("url", "par_id", F.xxhash64("url", "par_id", "start").alias("rec_id"),
+                F.col("surface").alias("name"))
+        .toPandas()
+    )
+    pars = spark.read.parquet(os.path.join(workdir, "paragraphs")).select(
+        "url", "par_id", "text"
+    ).toPandas()
+    assert not pars.duplicated(["url", "par_id"]).any()
+    want = ments.merge(pars, on=["url", "par_id"])[["rec_id", "name", "text"]]
+    assert len(want) == len(ments)
+    assert out["records"].columns == ["rec_id", "name", "text"]
+    assert sorted(map(tuple, out["records"].collect())) == sorted(
+        map(tuple, want.itertuples(index=False))
+    )
+
+
+def test_pipeline_pair_features_sorted_by_name_pair(pipeline_result):
+    """Each committed ``pair_features`` part file is sorted by
+    (name_a, name_b, rec_id_a, rec_id_b)."""
+    import glob
+    import os
+
+    import pyarrow.parquet as pq
+
+    _, workdir, *_ = pipeline_result
+    keys = ["name_a", "name_b", "rec_id_a", "rec_id_b"]
+    parts = glob.glob(os.path.join(workdir, "pair_features", "part-*.parquet"))
+    assert parts
+    for f in parts:
+        rows = list(zip(*(pq.read_table(f, columns=keys).column(k).to_pylist() for k in keys)))
+        assert rows == sorted(rows), f
+
+
+def test_checkpoint_stages_written_with_zstd(pipeline_result):
+    """Every column chunk of every committed part file is zstd-compressed."""
+    import glob
+    import os
+
+    import pyarrow.parquet as pq
+
+    _, workdir, *_ = pipeline_result
+    for stage in COMMITTED:
+        parts = glob.glob(os.path.join(workdir, stage, "part-*.parquet"))
+        assert parts, stage
+        for f in parts:
+            meta = pq.read_metadata(f)
+            codecs = {
+                meta.row_group(g).column(c).compression
+                for g in range(meta.num_row_groups)
+                for c in range(meta.num_columns)
+            }
+            assert codecs <= {"ZSTD"}, (stage, f, codecs)
+
+
 def test_checkpoint_lineage_describes_committed_files(spark, pipeline_result):
     """Per stage: the lineage rows sum to the committed row count, their
     partition ids are the part-file ids, and the job-free read-back schema
@@ -114,6 +179,12 @@ def test_checkpoint_lineage_describes_committed_files(spark, pipeline_result):
 
 
 def test_checkpoint_resume_reads_every_stage_without_recompute(spark, pipeline_result):
+    """Resuming a committed stage recomputes nothing and starts no Spark
+    job: its schema comes from a part-file footer and equals the one Spark
+    infers from the files."""
+    import os
+    import time
+
     from minimel_spark.sources.checkpoint import Checkpointer
 
     out, workdir, *_ = pipeline_result
@@ -124,10 +195,25 @@ def test_checkpoint_resume_reads_every_stage_without_recompute(spark, pipeline_r
 
     ckpt = Checkpointer(spark, workdir)
     n_lineage = ckpt.metrics().count()
+    sc = spark.sparkContext
+    group = "resume-starts-no-job"
+    sc.setJobGroup(group, group)
+    try:
+        got = {stage: ckpt.stage(stage, recompute) for stage in COMMITTED}
+        # a one-job sentinel: once it is listed, any earlier job of the group is
+        sc.parallelize([0], 1).count()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    tracker = sc.statusTracker()
+    deadline = time.monotonic() + 30
+    while not tracker.getJobIdsForGroup(group) and time.monotonic() < deadline:
+        time.sleep(0.05)
+    assert len(tracker.getJobIdsForGroup(group)) == 1
     for stage in COMMITTED:
-        got = ckpt.stage(stage, recompute)
-        assert got.schema == tables[stage].schema, stage
-        assert got.count() == tables[stage].count(), stage
+        path = os.path.join(workdir, stage)
+        assert got[stage].schema == spark.read.parquet(path).schema, stage
+        assert got[stage].schema == tables[stage].schema, stage
+        assert got[stage].count() == tables[stage].count(), stage
         assert ckpt.committed_rows(stage) == tables[stage].count(), stage
     # a resumed stage adds no lineage rows
     assert ckpt.metrics().count() == n_lineage
